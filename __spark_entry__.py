@@ -291,8 +291,9 @@ def _q_kg_entity_stubs(spark, sf_dir):
 
 
 def _q_kg_merge_map(spark, sf_dir):
-    """Canonicalization via the default MinHash-LSH blocking (the 100 TB
-    path), hash-checked against the frozen expected_components oracle."""
+    """Canonicalization through ``merge_map``'s default: the exact driver
+    path at this dictionary size (MinHash-LSH blocking above the size
+    gate), hash-checked against the frozen expected_components oracle."""
     return canonicalize.merge_map(_alias_dict(spark, sf_dir)).select(
         "canonical_name", "merged_name"
     )
@@ -300,10 +301,12 @@ def _q_kg_merge_map(spark, sf_dir):
 
 def _q_kg_merge_map_tokenblock(spark, sf_dir):
     """Exact-recall token blocking variant — must produce the identical
-    merge map (same oracle) as the LSH default."""
-    return canonicalize.merge_map(_alias_dict(spark, sf_dir), use_lsh=False).select(
-        "canonical_name", "merged_name"
-    )
+    merge map (same oracle) as the LSH default. Calls the Spark path
+    directly, so it stays oracle-checked next to the driver path that
+    ``kg_merge_map`` takes at this dictionary size."""
+    return canonicalize.merge_map_spark(
+        _alias_dict(spark, sf_dir), use_lsh=False
+    ).select("canonical_name", "merged_name")
 
 
 def _q_kg_triples(spark, sf_dir):

@@ -1,30 +1,44 @@
-"""Canonicalization — MinHash-blocked candidate pairs + iterative connected
-components, resolved to a merge map.
+"""Canonicalization — exact token-Jaccard pairs + connected components,
+resolved to a merge map.
 
 The reference's analog is canonicalization-by-key (``NamespaceCreator.scala:
 20-33``: groupBy name → one canonical node per group) plus the binding/alias
 table resolution (``BindingTableCompat``); our domain needs *fuzzy* grouping:
 near-duplicate canonical entity names (same entity_type, '_'-token Jaccard
-≥ 0.5) are one entity. That is inherently a global, iterative computation —
-the one place this engine runs a driver-controlled DataFrame loop (SURVEY.md
-§4.2 item 3): large-star/small-star-style min-label propagation with
-checkpointing to cut lineage, deterministic because the component
-representative is the MIN canonical name (order-free tie-breaking).
+≥ 0.5) are one entity, represented by the MIN canonical name of the
+component (order-free tie-breaking).
 
-Two blocking strategies produce candidate pairs; both are verified with the
-exact Jaccard predicate before CC, so precision is exact:
+``merge_map`` picks one of two implementations by dictionary size:
 
-- ``candidate_pairs_token_block`` — exact recall: self-join on
-  (entity_type, token). Fine when per-token document frequency is bounded;
-  a DF cap guards the quadratic blowup of stop-tokens at scale.
-- ``candidate_pairs_lsh`` — the 100 TB path: k=32 MinHash, 16 bands × 2 rows;
-  miss probability at the 0.5 threshold ≈ (1-0.25)^16 ≈ 1%, ≈ 0.08% at the
-  observed twin similarity 2/3. Banding keys are md5-derived (cross-engine
-  checkable), grouped map-side, no quadratic term outside buckets.
+- for a dictionary of at most ``MERGE_MAP_DRIVER_MAX_ROWS`` rows — every
+  dictionary this repo ships — it collects the (canonical_name,
+  entity_type) pairs in one job and runs an exact All-Pairs prefix-filtered
+  join (the filter of ``dedup.jaccard_prefix_pairs``) plus a
+  min-representative union-find in Python, returning a local relation. A
+  Spark plan for an entity-scale input costs more in per-job driver work
+  than the join itself.
+- above the gate, ``merge_map_spark``: candidate pairs from one of two
+  blockings, verified with the exact Jaccard predicate (so precision is
+  exact), then ``connected_components`` — the one driver-controlled
+  DataFrame loop of this engine (SURVEY.md §4.2 item 3): min-label
+  propagation with checkpointing to cut lineage.
+
+  - ``candidate_pairs_token_block`` — exact recall: self-join on
+    (entity_type, token). Fine when per-token document frequency is
+    bounded; a DF cap guards the quadratic blowup of stop-tokens at scale.
+  - ``candidate_pairs_lsh`` — the 100 TB path: k=32 MinHash, 16 bands × 2
+    rows; miss probability at the 0.5 threshold ≈ (1-0.25)^16 ≈ 1%, ≈ 0.08%
+    at the observed twin similarity 2/3. Banding keys are md5-derived
+    (cross-engine checkable), grouped map-side, no quadratic term outside
+    buckets.
 """
 
 from __future__ import annotations
 
+import math
+from collections import Counter, defaultdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,6 +47,16 @@ from ..functions.hashing import minhash_signature
 MERGE_JACCARD = 0.5
 MINHASH_K = 32
 LSH_BANDS = 16  # rows per band = MINHASH_K / LSH_BANDS = 2
+
+#: alias-dictionary rows up to which merge_map runs on the driver. Timed at
+#: the gate on a 4-core box (local[4], 2g driver): 100k rows shaped like
+#: testdata's dictionary ('<type>_<i>' over 4 types plus 20%
+#: '<type>_<i>_<i>dup' twins, 4 parquet partitions) take 2.1-3.4 s for the
+#: whole call, 1.8-2.2 s of it Python CPU, linear in rows. That is about
+#: what the Spark path spends on job overhead for the 1k-row shipped
+#: dictionary (~3 s); its LSH blocking is quadratic per type on this shape
+#: (19.9 s at 5k rows).
+MERGE_MAP_DRIVER_MAX_ROWS = 100_000
 
 
 def canonical_entities(alias_dict: DataFrame) -> DataFrame:
@@ -138,6 +162,8 @@ def connected_components(
     iteration cuts lineage (SURVEY.md §4.2: checkpoint cadence). Iterations
     needed = graph diameter; alias-merge components are tiny (pairs/paths),
     so convergence is 1-3 rounds. Deterministic: min() is order-free.
+    Raises ``RuntimeError`` if labels still change in round ``max_iter``
+    rather than return unconverged labels.
     """
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.dropDuplicates(["a", "b"]).localCheckpoint(eager=True)
@@ -165,8 +191,10 @@ def connected_components(
         changed = new_labels.where(F.col("__chg")).limit(1).count()
         labels = new_labels.drop("__chg")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds"
+    )
 
 
 def lsh_missed_pairs(alias_dict: DataFrame) -> DataFrame:
@@ -180,10 +208,108 @@ def lsh_missed_pairs(alias_dict: DataFrame) -> DataFrame:
     return exact.join(lsh, ["a", "b"], "left_anti")
 
 
+def _prefix_len(s: int, overlap_share: float) -> int:
+    """s - ceil(overlap_share * s) + 1, with the product rounded to 9 dp
+    first as in ``dedup.jaccard_prefix_pairs``: a product that is whole in
+    exact arithmetic must not ceil one too high from double rounding."""
+    return s - math.ceil(round(overlap_share * s, 9)) + 1
+
+
+def _jaccard_pairs(docs: list[tuple[str, frozenset]], threshold: float):
+    """Every (a, b) name pair of ``docs`` with token Jaccard ≥ threshold,
+    exactly. The All-Pairs candidate scheme: tokens ordered rarest first;
+    docs are probed in ascending size order with the prefix bound of
+    ``dedup.jaccard_prefix_pairs`` (s - ceil(t*s) + 1 tokens), against an
+    index of the shorter prefix s - ceil(2t/(1+t)*s) + 1 of every smaller
+    doc (Jaccard ≥ t forces overlap ≥ 2t/(1+t) * the smaller size). For
+    two-token names at t = 0.5 that index holds only each name's rarest
+    token, so a shared type prefix ('person_') makes no quadratic bucket.
+    Candidates are verified with the same double division as
+    ``verified_pairs``."""
+    freq = Counter(tok for _, toks in docs for tok in toks)
+    index_share = 2 * threshold / (1 + threshold)
+    index: dict[str, list[int]] = defaultdict(list)
+    docs = sorted(docs, key=lambda d: len(d[1]))
+    for i, (name, toks) in enumerate(docs):
+        s = len(toks)
+        ordered = sorted(toks, key=lambda tok: (freq[tok], tok))
+        seen: set[int] = set()
+        for tok in ordered[: _prefix_len(s, threshold)]:
+            for j in index[tok]:
+                if j not in seen:
+                    seen.add(j)
+                    other, other_toks = docs[j]
+                    inter = len(toks & other_toks)
+                    if inter / (s + len(other_toks) - inter) >= threshold:
+                        yield other, name
+        for tok in ordered[: _prefix_len(s, index_share)]:
+            index[tok].append(i)
+
+
+def merge_rows(rows: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Driver-side merge map of distinct (canonical_name, entity_type) rows:
+    one (canonical_name, merged_name) per row, merged_name = min name of its
+    component under same-type token Jaccard ≥ MERGE_JACCARD. Exact."""
+    parent = {name: name for name, _ in rows}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    by_type: dict[str, list] = defaultdict(list)
+    for name, etype in rows:
+        if name is not None:
+            by_type[etype].append((name, frozenset(name.split("_"))))
+    for docs in by_type.values():
+        for a, b in _jaccard_pairs(docs, MERGE_JACCARD):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return [(name, find(name)) for name, _ in rows]
+
+
 def merge_map(alias_dict: DataFrame, use_lsh: bool = True) -> DataFrame:
     """(canonical_name, merged_name) for every canonical in the dictionary
     (identity rows included) — the canonicalization output contract,
     matching the frozen ``expected_components`` oracle.
+
+    RECALL CONTRACT: exact for a dictionary of at most
+    ``MERGE_MAP_DRIVER_MAX_ROWS`` rows, where the map is computed on the
+    driver (:func:`merge_rows`) and returned as a local relation;
+    ``use_lsh`` has no effect there, since both blockings give this same
+    exact result. Above the gate, :func:`merge_map_spark` with the chosen
+    blocking: exact with token blocking, ≥ 99% recall with the LSH default.
+    Below the gate the Spark work is one ``limit`` collect of the two name
+    columns, deduplicated on the driver: no shuffle, and one job when the
+    dictionary is one partition."""
+    rows = (
+        alias_dict.select("canonical_name", "entity_type")
+        .limit(MERGE_MAP_DRIVER_MAX_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > MERGE_MAP_DRIVER_MAX_ROWS:
+        return merge_map_spark(alias_dict, use_lsh)
+    merged = merge_rows(list(dict.fromkeys(map(tuple, rows))))
+    # from an Arrow table the frame is a JVM LocalRelation; from a Python
+    # list it would be an RDD of pickled rows that every consumer's job
+    # decodes again in Python workers
+    table = pa.table(
+        {
+            "canonical_name": [n for n, _ in merged],
+            "merged_name": [m for _, m in merged],
+        },
+        schema=pa.schema(
+            [("canonical_name", pa.string()), ("merged_name", pa.string())]
+        ),
+    )
+    return alias_dict.sparkSession.createDataFrame(table)
+
+
+def merge_map_spark(alias_dict: DataFrame, use_lsh: bool = True) -> DataFrame:
+    """The distributed merge map: blocking, exact verify, connected
+    components. Same output contract as :func:`merge_map`.
 
     The DEFAULT blocking is MinHash-LSH (the 100 TB path). Token blocking
     degrades two ways on stop-token-heavy dictionaries: uncapped it admits
@@ -194,8 +320,8 @@ def merge_map(alias_dict: DataFrame, use_lsh: bool = True) -> DataFrame:
     tokens). Both paths feed the same exact-Jaccard verify, so precision is
     identical; LSH recall at the 0.5 threshold is ≥ 99% in theory and
     exhaustively identical to token blocking on the shipped dictionary
-    (test_merge_map_token_vs_lsh, kg_merge_map vs kg_merge_map_tokenblock
-    driver rows).
+    (test_merge_map_token_vs_lsh; the kg_merge_map_tokenblock driver row
+    checks the token-blocking path against the DuckDB oracle).
 
     RECALL BOUND (public contract): LSH blocking is probabilistic — a true
     pair at exactly the 0.5 Jaccard threshold is missed with probability

@@ -131,9 +131,8 @@ def final_triples(
     """
     if merge is None:
         # merge map is entity-scale (tiny vs the token stream): computed
-        # once, checkpointed, broadcast into apply_merge on both branches.
+        # once, broadcast into apply_merge on both branches.
         merge = canonicalize.merge_map(alias_dict, use_lsh=use_lsh)
-        merge = merge.localCheckpoint(eager=True)
     # The token explode feeds both branches UNCACHED, deliberately: it is a
     # zero-shuffle map over the (resident) input, and recomputing it twice is
     # measurably cheaper than writing 10× the input volume into the block
@@ -307,7 +306,7 @@ def fact_intervals(
     from . import canonicalize
 
     if merge is None:
-        merge = canonicalize.merge_map(alias_dict).localCheckpoint(eager=True)
+        merge = canonicalize.merge_map(alias_dict)
     rt = extraction.raw_triples(transcripts)
     lt = linking.linked_triples_premerge(rt, alias_dict)
     lt = linking.apply_merge(lt, merge, "subj_canonical", "subj")

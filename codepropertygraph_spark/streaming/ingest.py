@@ -41,7 +41,7 @@ def stream_triples(
     a growing directory incrementally; pass a value >= the file count to
     drain in ONE batch when conversations may span files (``follows`` pairs
     are computed within a batch — see the module docstring)."""
-    merge = canonicalize.merge_map(alias_dict).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(alias_dict)
 
     stream = (
         spark.readStream.schema(S.TRANSCRIPTS_SCHEMA)
@@ -68,21 +68,20 @@ def stream_triples(
     return writer.start()
 
 
-def _first_mention_fn(spark: SparkSession, alias_dict: DataFrame):
+def _first_mention_fn(
+    spark: SparkSession, alias_dict: DataFrame, merge_map: DataFrame
+):
     """Driver-built per-turn first-mention closure, broadcast to executors.
 
-    Dictionary canonicals are rewritten through the canonicalization merge
-    map ONCE at broadcast-build time, so stateful paths emit exactly the
-    same post-merge names as the batch ``kg.follows_triples`` (and the
-    frozen extractor's link_surface). External stubs are never merge-map
-    keys (the map is dictionary-canonical-scoped), so the external fallback
-    below is already parity-correct."""
+    Dictionary canonicals are rewritten through ``merge_map`` (the caller's
+    ``canonicalize.merge_map(alias_dict)``) ONCE at broadcast-build time, so
+    stateful paths emit exactly the same post-merge names as the batch
+    ``kg.follows_triples`` (and the frozen extractor's link_surface).
+    External stubs are never merge-map keys (the map is dictionary-canonical-
+    scoped), so the external fallback below is already parity-correct."""
     from ..operators import linking
 
-    merge = {
-        r.canonical_name: r.merged_name
-        for r in canonicalize.merge_map(alias_dict).collect()
-    }
+    merge = {r.canonical_name: r.merged_name for r in merge_map.collect()}
     best = {
         r.alias: merge.get(r.canonical_name, r.canonical_name)
         for r in linking.best_alias(alias_dict).collect()
@@ -124,7 +123,9 @@ def stream_follows_stateful(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    first_mention = _first_mention_fn(spark, alias_dict)
+    first_mention = _first_mention_fn(
+        spark, alias_dict, canonicalize.merge_map(alias_dict)
+    )
 
     def update(key, pdfs, state: GroupState):
         (conv_id,) = key
@@ -196,6 +197,7 @@ def stream_follows_exact(
     output_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
+    merge: DataFrame | None = None,
 ):
     """Cross-batch ``follows`` edges EXACT under arbitrary arrival order.
 
@@ -221,47 +223,44 @@ def stream_follows_exact(
     Scale shape: state is O(turns-per-conversation) — identical to what any
     per-conversation window already shuffles — and emission is
     O(pairs-per-touched-conversation) per batch, not O(corpus).
+
+    ``merge`` is ``canonicalize.merge_map(alias_dict)`` when the caller has
+    it already; otherwise it is computed here. The state's ``ts_us`` field
+    holds nanoseconds since the epoch, as it always has; checkpoints depend
+    on that.
     """
+    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    first_mention = _first_mention_fn(spark, alias_dict)
+    if merge is None:
+        merge = canonicalize.merge_map(alias_dict)
+    first_mention = _first_mention_fn(spark, alias_dict, merge)
 
     def update(key, pdfs, state: GroupState):
         (conv_id,) = key
-        turns: list[tuple[int, int, str]] = []
+        idxs, tss, cans = [], [], []
         for pdf in pdfs:
-            for _, row in pdf.iterrows():
-                turns.append(
-                    (
-                        int(row["turn_idx"]),
-                        row["ts"].value,
-                        first_mention(row["text"]) or "",
-                    )
-                )
-        if state.exists:
-            idxs, tss, cans, seq = state.get
-            turns.extend(
-                (int(i), int(t), c or "")
-                for i, t, c in zip(idxs, tss, cans)
+            idxs.append(pdf["turn_idx"].to_numpy(dtype=np.int64))
+            tss.append(pdf["ts"].dt.as_unit("ns").array.asi8)
+            cans.append(
+                np.array([first_mention(t) or "" for t in pdf["text"]], dtype=object)
             )
+        if state.exists:
+            s_idxs, s_tss, s_cans, seq = state.get
+            idxs.append(np.asarray(s_idxs, dtype=np.int64))
+            tss.append(np.asarray(s_tss, dtype=np.int64))
+            cans.append(np.array([c or "" for c in s_cans], dtype=object))
         else:
             seq = 0
-        turns.sort(key=lambda t: (t[0], t[1]))
+        idx, ts, can = (np.concatenate(a) for a in (idxs, tss, cans))
+        # stable, so equal (turn_idx, ts) keys keep arrival-then-state order
+        order = np.lexsort((ts, idx))
+        idx, ts, can = idx[order], ts[order], can[order]
         seq += 1
-        state.update(
-            (
-                [t[0] for t in turns],
-                [t[1] for t in turns],
-                [t[2] for t in turns],
-                int(seq),
-            )
-        )
-        out_subj, out_obj = [], []
-        for (_, _, prev_c), (_, _, cur_c) in zip(turns, turns[1:]):
-            if prev_c and cur_c:
-                out_subj.append(cur_c)
-                out_obj.append(prev_c)
+        state.update((idx.tolist(), ts.tolist(), can.tolist(), int(seq)))
+        pair = (can[:-1] != "") & (can[1:] != "")
+        out_subj, out_obj = can[1:][pair].tolist(), can[:-1][pair].tolist()
         if not out_subj:
             # still version the (empty) pair set: a late mention-less turn
             # can BREAK every pair a previous batch emitted, and the reader
@@ -332,7 +331,7 @@ def stream_triples_exact(
     """
     import os
 
-    merge = canonicalize.merge_map(alias_dict).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(alias_dict)
     os.makedirs(output_dir, exist_ok=True)
 
     # Turn-local ⇒ batch granularity cannot change the clause result, so
@@ -367,6 +366,7 @@ def stream_triples_exact(
         os.path.join(output_dir, "follows"),
         os.path.join(checkpoint_dir, "follows"),
         max_files_per_trigger=max_files_per_trigger,
+        merge=merge,
     )
 
 
@@ -536,7 +536,7 @@ def stream_diff_zips(
     from ..operators import graph as G
     from ..operators import proto_io
 
-    merge = canonicalize.merge_map(alias_dict).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(alias_dict)
     os.makedirs(out_dir, exist_ok=True)
 
     stream = (

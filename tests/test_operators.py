@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from codepropertygraph_spark import schema as S
@@ -107,16 +108,97 @@ def test_connected_components_chain(spark):
     assert cc == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "x": "x", "y": "x"}
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    nodes = spark.createDataFrame([(c,) for c in "abcdef"], "name string")
+    edges = spark.createDataFrame(
+        [(a, b) for a, b in zip("abcde", "bcdef")], "a string, b string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        canonicalize.connected_components(nodes, edges, max_iter=2)
+
+
 def test_merge_map_token_vs_lsh(spark, alias_dict):
     token = {
         (r.canonical_name, r.merged_name)
-        for r in canonicalize.merge_map(alias_dict, use_lsh=False).collect()
+        for r in canonicalize.merge_map_spark(alias_dict, use_lsh=False).collect()
     }
     lsh = {
         (r.canonical_name, r.merged_name)
-        for r in canonicalize.merge_map(alias_dict, use_lsh=True).collect()
+        for r in canonicalize.merge_map_spark(alias_dict, use_lsh=True).collect()
     }
     assert token == lsh  # LSH blocking loses nothing at this similarity level
+
+
+def _stop_token_alias(spark, n=100):
+    """'svc' plus n 'svc_<i>': every name carries the stop token, and
+    ('svc', 'svc_i') sits exactly on the J = 1/2 threshold."""
+    rows = [("svc", "svc", "TOOL", 0.9)]
+    rows += [(f"svc_{i}", f"svc_{i}", "TOOL", 0.9) for i in range(n)]
+    return spark.createDataFrame(
+        rows, "alias string, canonical_name string, entity_type string, prior double"
+    )
+
+
+def _random_alias(spark, seed=11, n=300):
+    """Names of 1-5 tokens drawn with repetition from a 12-token vocabulary
+    over two entity types: shared tokens everywhere, repeated tokens
+    inside a name ('t3_t3_t7'), many pairs at or near the threshold."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"t{i}" for i in range(12)]
+    rows = []
+    for i in range(n):
+        name = "_".join(rng.choice(vocab) for _ in range(rng.randint(1, 5)))
+        rows.append((f"a{i}", name, rng.choice(["ORG", "TOOL"]), 0.5))
+    return spark.createDataFrame(
+        rows, "alias string, canonical_name string, entity_type string, prior double"
+    )
+
+
+@pytest.mark.parametrize("which", ["fixture", "stop_tokens", "random"])
+def test_merge_map_driver_path_equals_spark_paths(spark, alias_dict, which):
+    from codepropertygraph_spark import testdata as td
+
+    ad = {
+        "fixture": lambda: alias_dict,
+        "stop_tokens": lambda: _stop_token_alias(spark),
+        "random": lambda: _random_alias(spark),
+    }[which]()
+    as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
+    driver = as_set(canonicalize.merge_map(ad))
+    assert driver == as_set(canonicalize.merge_map_spark(ad, use_lsh=True))
+    assert driver == as_set(canonicalize.merge_map_spark(ad, use_lsh=False))
+    rows = [r.asDict() for r in ad.collect()]
+    assert driver == set(td.build_merge_map(rows).items())
+    if which == "stop_tokens":
+        assert ("svc_0", "svc") in driver
+
+
+def test_merge_map_gate_zero_takes_spark_path(spark, monkeypatch):
+    ad = _mini_alias(spark)
+    calls = []
+    spark_path = canonicalize.merge_map_spark
+    monkeypatch.setattr(canonicalize, "MERGE_MAP_DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(
+        canonicalize,
+        "merge_map_spark",
+        lambda *a, **k: calls.append(a) or spark_path(*a, **k),
+    )
+    got = {tuple(r) for r in canonicalize.merge_map(ad).collect()}
+    assert len(calls) == 1
+    assert got == {(n, n) for n in ("person_one", "person_two", "tool_hammer", "org_hammer")}
+
+
+def test_merge_map_driver_path_job_count(spark, alias_dict):
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-map-jobs", "merge_map below the gate")
+    try:
+        canonicalize.merge_map(alias_dict)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("merge-map-jobs")) == 1
 
 
 def test_merge_map_matches_frozen(spark, alias_dict, expected_components):
@@ -252,11 +334,11 @@ def test_lsh_beats_token_blocking_on_stop_tokens(spark):
     # and the full LSH merge map equals the exact-recall (uncapped) one
     token_map = {
         (r.canonical_name, r.merged_name)
-        for r in canonicalize.merge_map(ad, use_lsh=False).collect()
+        for r in canonicalize.merge_map_spark(ad, use_lsh=False).collect()
     }
     lsh_map = {
         (r.canonical_name, r.merged_name)
-        for r in canonicalize.merge_map(ad, use_lsh=True).collect()
+        for r in canonicalize.merge_map_spark(ad, use_lsh=True).collect()
     }
     assert lsh_map == token_map
 

@@ -196,6 +196,42 @@ def test_stream_triples_exact_out_of_order_arrival(spark, tmp_path):
     assert ("cO", "person_one", "follows", "person_two") in follows
 
 
+def test_stream_follows_exact_state_keeps_nanosecond_ts(spark, tmp_path):
+    """The follows state stores each turn's ts as nanoseconds since the
+    epoch (its field is named ts_us), sorted by (turn_idx, ts). Checkpoints
+    written in that unit must keep loading, so the unit must not drift."""
+    from datetime import datetime
+
+    base = str(tmp_path)
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    rows = [
+        ("cN", 2, "user", "p2 mentions p1 b", None, datetime(2024, 1, 1, 0, 0, 10)),
+        ("cN", 1, "user", "p1 mentions p2 a", None, datetime(2024, 1, 1, 0, 0, 0)),
+        ("cN", 1, "tool", "nothing to see", None, datetime(2024, 1, 1, 0, 0, 5)),
+    ]
+    ad = spark.createDataFrame(
+        [("p1", "person_one", "PERSON", 0.9), ("p2", "person_two", "PERSON", 0.9)],
+        "alias string, canonical_name string, entity_type string, prior double",
+    )
+    _write_files(spark, base, [rows], schema)
+    # the five-positional-argument form, as callers outside the package use it
+    ingest.stream_follows_exact(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
+
+    (state,) = (
+        spark.read.format("statestore").load(f"{base}/ckpt")
+        .select("value.groupState.*").collect()
+    )
+    assert list(state.turn_idxs) == [1, 1, 2]
+    ts = list(state.ts_us)
+    assert [t - ts[0] for t in ts] == [0, 5 * 10**9, 10 * 10**9]
+    # 2024-01-01 in ns, give or take any local-time offset of the input
+    assert abs(ts[0] - 1704067200 * 10**9) <= 14 * 3600 * 10**9
+    assert list(state.canonicals) == ["person_one", "", "person_two"]
+    assert state.seq == 1
+    out = spark.read.parquet(f"{base}/out").collect()
+    assert [(r.subj, r.obj) for r in out] == [(None, None)]
+
+
 def test_stream_hourly_counts_match_batch(spark, tmp_path):
     import shutil, os
 
