@@ -376,7 +376,7 @@ def _q_kg_toolcalls(spark, sf_dir):
 
 def _q_kg_graph_nodes(spark, sf_dir):
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     nodes = (
         G.conversation_nodes(tr)
         .unionByName(G.turn_nodes(tr))
@@ -389,7 +389,7 @@ def _q_kg_graph_nodes(spark, sf_dir):
 
 def _q_kg_graph_edges(spark, sf_dir):
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     edges = (
         G.ast_edges(tr, ad)
         .unionByName(G.next_edges(tr))
@@ -1709,7 +1709,7 @@ def _q_kg_reaching_defs(spark, sf_dir):
     """REACHING_DEF edges (A19): per-(conversation, entity) def→use chains
     on the linear turn CFG."""
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     return dataflow.reaching_def_edges(tr, ad, merge)
 
 
@@ -1923,7 +1923,7 @@ def _q_kg_entities(spark, sf_dir):
     """Final entity table: every post-merge canonical in use, with type and
     external flag (TypeNodePass + MethodStubCreator output projection)."""
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     nodes = G.entity_nodes(tr, ad, merge)
     return nodes.select(
         "full_name",
@@ -1962,7 +1962,7 @@ def _q_kg_ast_json_tree(spark, sf_dir):
 
     d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
     aj = spark.read.parquet(f"{d}/ast_json.parquet")
-    return json_ingest.json_tree(aj, "ast_id", "ast")
+    return json_ingest.json_tree_arrow(aj, "ast_id", "ast")
 
 
 _TAINT_PATTERN = "$.clauses[*].subj.surface"
@@ -1978,21 +1978,11 @@ def _q_kg_access_path_match(spark, sf_dir):
 
     d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
     aj = spark.read.parquet(f"{d}/ast_json.parquet")
-    tree = json_ingest.json_tree(aj, "ast_id", "ast")
+    tree = json_ingest.json_tree_arrow(aj, "ast_id", "ast")
     m = tree.select(
         access_path.match_path(F.col("path"), _TAINT_PATTERN).getField("kind").alias("kind")
     )
     return m.groupBy("kind").agg(F.count("*").alias("n")).orderBy("kind")
-
-
-def _q_kg_ast_json_tree_arrow(spark, sf_dir):
-    """Single-pass Arrow walker variant — must hash-match the declarative
-    walker's oracle exactly (cross-engine parity of the two shapes)."""
-    from codepropertygraph_spark.sources import json_ingest
-
-    d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
-    aj = spark.read.parquet(f"{d}/ast_json.parquet")
-    return json_ingest.json_tree_arrow(aj, "ast_id", "ast")
 
 
 def _q_kg_mention_ast_link(spark, sf_dir):
@@ -2050,7 +2040,7 @@ def _q_kg_reaching_defs_fields(spark, sf_dir):
     aj = spark.read.parquet(f"{d}/ast_json.parquet")
     tree = json_ingest.json_tree_arrow(aj, "ast_id", "ast")
     ad = _alias_dict(spark, sf_dir)
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     surf = tree.where(
         F.col("path").rlike(r"\.clauses\[\d+\]\.(subj|obj)\.surface$")
     ).select(
@@ -2115,7 +2105,7 @@ def _q_kg_reaching_defs_fields_ext(spark, sf_dir):
     aj = spark.read.parquet(f"{d}/ast_json.parquet")
     tree = json_ingest.json_tree_arrow(aj, "ast_id", "ast")
     ad = _alias_dict(spark, sf_dir)
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     surf = tree.where(
         F.col("path").rlike(r"\.clauses\[\d+\]\.(subj|obj)\.surface$")
     ).select(
@@ -2174,7 +2164,7 @@ def _q_kg_stub_removal(spark, sf_dir):
     from codepropertygraph_spark.plans import diff as D
 
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     ents = G.entity_nodes(tr, ad, merge)
     real = ents.where(
         F.element_at("props", "is_external") != F.lit("true")
@@ -2694,7 +2684,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_reaching_defs_fields": _q_kg_reaching_defs_fields,
     "kg_traversal_mentions": _q_kg_traversal_mentions,
     "kg_traversal_coalesce": _q_kg_traversal_coalesce,
-    "kg_ast_json_tree_arrow": _q_kg_ast_json_tree_arrow,
     "kg_access_path_match": _q_kg_access_path_match,
     "kg_mention_ast_link": _q_kg_mention_ast_link,
     "events_json_extract": _q_events_json_extract,
@@ -2758,14 +2747,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # (100), so perfect every-other-round coverage is no longer possible;
 # coverage policy, in priority order: (1) every query NEW this round gets
 # its first external green now, (2) the stalest queries (last green r3)
-# rotate in, (3) the six r3-green VARIANT queries listed in
+# rotate in, (3) the r3-green VARIANT queries listed in
 # GATE_DEFERRED — each the alternate formulation of an in-window primary,
 # all green in this round's local 106/106 gate run — wait one extra round
 # and lead the r6 window. tests/test_oracle_types.py pins exactly this.
 GATE_DEFERRED = [
     "kg_raw_triples_udf",       # pandas-UDF variant of kg_raw_triples
     "kg_merge_map_tokenblock",  # token-blocking variant of kg_merge_map
-    "kg_ast_json_tree_arrow",   # Arrow-walker variant of kg_ast_json_tree
     "ann_cosine_topk_lsh",      # LSH variant of ann_cosine_topk
     "ann_cosine_topk_ivf",      # IVF variant of ann_cosine_topk
     "dedup_embedding_cosine",   # bucketed variant of _exact (r4-green)
@@ -2805,8 +2793,7 @@ GATE_DEFERRED = [
     "kg_best_alias",            # scored best-alias linking runs inside
                                 # final_triples for every in-window
                                 # kg_entity_*/kg_new_facts query
-    "kg_ast_json_tree",         # unchanged since r3 green; leads the r6
-                                # window with its deferred arrow variant
+    "kg_ast_json_tree",         # r3 green; leads the r6 window
     # Displaced by kg_bgp_optional (never greened, same priority rule):
     "events_kmv_users",         # its two-phase rewrite this round is
                                 # output-bit-identical by the merge-
@@ -4163,8 +4150,6 @@ ORACLES["kg_access_path_match"] = f"""
            count(*) AS n
     FROM m GROUP BY 1 ORDER BY 1
 """
-
-ORACLES["kg_ast_json_tree_arrow"] = ORACLES["kg_ast_json_tree"]
 
 ORACLES["multimodal_resize"] = """
     WITH dec AS (

@@ -548,9 +548,7 @@ def _salted_bridge_join(
     return l.join(r, keys + ["__salt"]).drop("__salt")
 
 
-def _crossing_pairs(
-    frontier: DataFrame, depart: DataFrame, caches: list[DataFrame]
-) -> DataFrame:
+def _crossing_pairs(frontier: DataFrame, depart: DataFrame) -> DataFrame:
     """Distinct (src, dst) pairs completing ONE more conversation crossing —
     the final level of :func:`reachable_cross_conversation`, where no later
     level consumes witness summaries, so only pair existence matters.
@@ -704,7 +702,9 @@ def _crossing_pairs(
     # eager checkpoint (not a lazy persist): `proven` and `chk` both scan
     # the grid inside the caller's ONE materialization job — a lazy cache
     # would race and double-compute; the checkpoint is the same single
-    # barrier the old guard job paid on this path.
+    # barrier the old guard job paid on this path. Its blocks are freed by
+    # Spark's ContextCleaner when the frame is garbage-collected, not by the
+    # caller's _iter_caches unpersist.
     grid = (
         frontier.select("src")
         .dropDuplicates()
@@ -934,7 +934,7 @@ def reachable_cross_conversation(
                 # summaries, so only the distinct (src, dst) pairs are
                 # needed — dispatch to the adaptive pair step (pigeonhole
                 # fast path on dense corpora, plain expansion on sparse).
-                lv = _crossing_pairs(frontier, depart, _iter_caches)
+                lv = _crossing_pairs(frontier, depart)
                 levels.append(lv.withColumn("crossings", F.lit(depth)))
                 break
             # INTERMEDIATE level: the next crossing needs full witness

@@ -3,21 +3,15 @@
 The reference's frontend walks a parser-produced JSON AST into typed nodes
 and edges with deterministic id arithmetic
 (``fuzzyc2cpg/.../FuzzyC2Cpg.scala:1661-1781``: children recursion + per-node
-key assignment). :func:`json_tree` is the generic Spark translation: an
+key assignment). :func:`json_tree_arrow` is the Spark translation: an
 arbitrary nested JSON column becomes one row per JSON tree node —
 (id, path, parent_path, depth, kind, value, n_children, node_id, parent_id) —
 with content-addressed 60-bit node ids (``ids.hash60`` over (doc, path), the
 KeyPool analog, DuckDB-recomputable).
 
-Execution shape: a driver-controlled LEVEL loop (bounded by the document
-depth, a schema property — single digits in practice), where each level is a
-pure JVM expression stage: ``schema_of_variant`` classifies the node,
-``json_object_keys`` / ``json_array_length`` enumerate children, and
-``to_json(variant_get(...))`` extracts each child's raw JSON *preserving
-types* (quotes on strings, bare literals otherwise) — no Python, no Arrow
-transfer, no shuffle at any level (the whole walk is map-only; Catalyst fuses
-each level into the scan). One driver ``isEmpty`` action per level bounds the
-loop exactly like ``traversal.repeat_out``.
+Execution shape: ONE ``mapInArrow`` pass parses each document once and
+walks it with an explicit stack, so there is no depth limit, no driver
+loop and no shuffle; the node ids are computed JVM-side afterwards.
 
 Path grammar (shared with the DuckDB oracle): root ``$``, object member
 ``<parent>.<key>``, array element ``<parent>[<i>]``. Keys are assumed
@@ -32,106 +26,6 @@ from pyspark.sql import functions as F
 
 from ..ids import hash60
 
-_CHILDREN = """
-CASE
-  WHEN st LIKE 'OBJECT%' THEN
-    transform(json_object_keys(frag), k -> named_struct(
-      'p', concat('.', k),
-      'f', coalesce(to_json(variant_get(parse_json(frag), concat('$.', k))), 'null')))
-  WHEN st LIKE 'ARRAY%' AND cast(json_array_length(frag) as int) > 0 THEN
-    transform(sequence(0, cast(json_array_length(frag) as int) - 1),
-      i -> named_struct(
-        'p', concat('[', cast(i as string), ']'),
-        'f', coalesce(to_json(variant_get(parse_json(frag), concat('$[', cast(i as string), ']'))), 'null')))
-  ELSE cast(array() as array<struct<p: string, f: string>>)
-END
-"""
-
-
-def _kind_col():
-    st = F.col("st")
-    return (
-        F.when(st.startswith("OBJECT"), "object")
-        .when(st.startswith("ARRAY"), "array")
-        .when(st == "STRING", "string")
-        .when(st == "BOOLEAN", "boolean")
-        .when(st == "VOID", "null")
-        .otherwise("number")
-    )
-
-
-def json_tree(
-    df: DataFrame, id_col: str, json_col: str, max_depth: int = 16
-) -> DataFrame:
-    """One row per JSON tree node of ``json_col``, every level JVM-side.
-
-    Output: (``id_col``, path, parent_path, depth, kind, value, n_children,
-    node_id, parent_id). ``value`` is the scalar text (strings unquoted,
-    numbers/booleans as literals), NULL for containers and JSON nulls.
-
-    Raises ``ValueError`` if any document is deeper than ``max_depth`` —
-    silent truncation would diverge from :func:`json_tree_arrow`, which walks
-    to arbitrary depth under the same output contract.
-    """
-    frontier = df.select(
-        F.col(id_col),
-        F.lit("$").alias("path"),
-        F.lit(None).cast("string").alias("parent_path"),
-        F.col(json_col).alias("frag"),
-        F.lit(0).alias("depth"),
-    )
-    levels: list[DataFrame] = []
-    for _ in range(max_depth + 1):
-        # cut lineage per level: without this, level L's isEmpty() action
-        # re-parses levels 1..L-1 from scratch (O(depth²) JSON parsing)
-        frontier = frontier.localCheckpoint(eager=True)
-        cur = frontier.withColumn(
-            "st", F.expr("schema_of_variant(parse_json(frag))")
-        ).withColumn("kind", _kind_col())
-        nodes = cur.select(
-            F.col(id_col),
-            "path",
-            "parent_path",
-            F.col("depth").cast("long").alias("depth"),
-            "kind",
-            F.when(
-                F.col("kind").isin("object", "array", "null"), F.lit(None)
-            )
-            .otherwise(F.expr("cast(parse_json(frag) as string)"))
-            .alias("value"),
-            F.when(F.col("kind") == "object", F.expr("size(json_object_keys(frag))"))
-            .when(F.col("kind") == "array", F.expr("cast(json_array_length(frag) as int)"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("n_children"),
-        )
-        levels.append(nodes)
-        frontier = cur.select(
-            F.col(id_col),
-            F.col("path").alias("__pp"),
-            F.col("depth"),
-            F.explode(F.expr(_CHILDREN)).alias("c"),
-        ).select(
-            F.col(id_col),
-            F.concat(F.col("__pp"), F.col("c.p")).alias("path"),
-            F.col("__pp").alias("parent_path"),
-            F.col("c.f").alias("frag"),
-            (F.col("depth") + 1).alias("depth"),
-        )
-        if frontier.isEmpty():
-            break
-    else:
-        # loop exhausted without an empty frontier: nodes deeper than
-        # max_depth exist and would be silently dropped — refuse instead.
-        raise ValueError(
-            f"json_tree: documents exceed max_depth={max_depth}; raise "
-            "max_depth or use json_tree_arrow (unbounded single-pass walker)"
-        )
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return _with_ids(out, id_col)
-
 
 def _with_ids(out: DataFrame, id_col: str) -> DataFrame:
     key = F.concat_ws("|", F.lit("JSON"), F.col(id_col).cast("string"), F.col("path"))
@@ -145,19 +39,19 @@ def _with_ids(out: DataFrame, id_col: str) -> DataFrame:
 
 
 def json_tree_arrow(df: DataFrame, id_col: str, json_col: str) -> DataFrame:
-    """Single-pass Arrow-batched walker — same output contract as
-    :func:`json_tree`, hash-checked against the same oracle.
+    """One row per JSON tree node of ``json_col``, in a single Arrow pass.
 
-    This is the throughput shape: one ``mapInArrow`` pass parses each
-    document ONCE and emits its whole tree (no per-level variant re-parse,
-    no driver loop), the textbook justified-UDF case — a schema-less
-    recursive parse the built-in expressions can only express as L passes
-    over re-serialized fragments. Zero shuffle; node ids stay JVM-side
-    (same md5 expressions as the declarative walker). Output batches are
-    built directly as Arrow record batches: constructing a pandas frame
-    from the walked columns measured 7x slower than ``pa.array`` for the
-    same data (pandas object-dtype boxing), and mapInPandas would convert
-    it right back to Arrow anyway."""
+    Output: (``id_col``, path, parent_path, depth, kind, value, n_children,
+    node_id, parent_id). ``value`` is the scalar text (strings unquoted,
+    numbers/booleans as literals), NULL for containers and JSON nulls.
+
+    Each document is parsed ONCE and its whole tree emitted — a schema-less
+    recursive parse the built-in expressions can only express as one pass
+    per depth level over re-serialized fragments. Output batches are built
+    directly as Arrow record batches: constructing a pandas frame from the
+    walked columns measured 7x slower than ``pa.array`` for the same data
+    (pandas object-dtype boxing), and mapInPandas would convert it right
+    back to Arrow anyway."""
     import json
     from collections.abc import Iterator
 

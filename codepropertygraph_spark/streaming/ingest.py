@@ -2,18 +2,21 @@
 
 The pass/overlay model is naturally incremental (SURVEY.md §2.F): a new
 batch of transcripts is just more DiffGraph rows, so streaming ingestion
-reuses the *identical* batch stage functions under ``foreachBatch``. The
-reference has no streaming at all — this is the Spark-native extension the
-overlay architecture makes free.
+reuses the *identical* batch stage functions. The reference has no
+streaming at all — this is the Spark-native extension the overlay
+architecture makes free.
 
-``stream_triples`` wires: file-source ``readStream`` over a transcripts
-directory → per-micro-batch extract→link→merge (the same
-``kg.clause_triples`` / ``follows`` code) → append to an output directory,
-with checkpointing for exactly-once file-sink semantics. ``follows`` edges
-are computed *within* each micro-batch there; ``stream_triples_exact``
-composes the stateless clause stream with ``stream_follows_exact``'s
-versioned ``applyInPandasWithState`` buffer so the drained result equals
-the batch triple set under ANY batch split and row arrival order.
+The triple stream has one path, exact under ANY batch split and row
+arrival order: ``stream_triples_exact`` runs the turn-local clause triples
+(the same ``kg.clause_triples`` code) under ``foreachBatch`` and the
+order-sensitive ``follows`` edges through ``stream_follows_exact``'s
+versioned ``applyInPandasWithState`` buffer, both checkpointed for
+exactly-once file sinks; ``read_triples_exact`` assembles the drained
+result, which equals the batch ``kg.final_triples`` set.
+
+The other streams here are the same idea over other operators: an
+incremental exact-dedup keep-list, watermarked hourly counts,
+sessionization, and one DiffGraph zip per micro-batch.
 """
 
 from __future__ import annotations
@@ -25,49 +28,6 @@ from .. import schema as S
 from ..operators import canonicalize, kg
 
 
-def stream_triples(
-    spark: SparkSession,
-    input_dir: str,
-    alias_dict: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-    max_files_per_trigger: int = 4,
-):
-    """Start (and with trigger_once=True, run to completion) a streaming
-    query that turns arriving transcript parquet files into triples.
-
-    ``max_files_per_trigger`` controls batch granularity: the default drains
-    a growing directory incrementally; pass a value >= the file count to
-    drain in ONE batch when conversations may span files (``follows`` pairs
-    are computed within a batch — see the module docstring)."""
-    merge = canonicalize.merge_map(alias_dict)
-
-    stream = (
-        spark.readStream.schema(S.TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        triples = (
-            kg.clause_triples(batch_df, alias_dict, merge)
-            .unionByName(kg.follows_triples(batch_df, alias_dict, merge))
-            .dropDuplicates(["conv_id", "subj", "pred", "obj"])
-        )
-        triples.write.mode("append").parquet(output_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
-
-
 def _first_mention_fn(
     spark: SparkSession, alias_dict: DataFrame, merge_map: DataFrame
 ):
@@ -75,8 +35,9 @@ def _first_mention_fn(
 
     Dictionary canonicals are rewritten through ``merge_map`` (the caller's
     ``canonicalize.merge_map(alias_dict)``) ONCE at broadcast-build time, so
-    stateful paths emit exactly the same post-merge names as the batch
-    ``kg.follows_triples`` (and the frozen extractor's link_surface).
+    the stateful follows path emits exactly the same post-merge names as
+    the batch ``kg.follows_triples`` (and the frozen extractor's
+    link_surface).
     External stubs are never merge-map keys (the map is dictionary-canonical-
     scoped), so the external fallback below is already parity-correct."""
     from ..operators import linking
@@ -103,93 +64,6 @@ def _first_mention_fn(
     return first_mention
 
 
-def stream_follows_stateful(
-    spark: SparkSession,
-    input_dir: str,
-    alias_dict: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-):
-    """Cross-micro-batch ``follows`` edges via ``applyInPandasWithState``:
-    per-conversation state carries the last seen turn's first-mention, so a
-    conversation split across arriving files still yields the boundary
-    follows pair (the limitation of the stateless foreachBatch path).
-
-    State shape per conv_id: (last_turn_idx, last_ts_us, last_canonical).
-    Assumes per-conversation arrival in turn order (append-only transcript
-    logs), the same assumption the reference's single pass makes about its
-    input file. Emits (conv_id, subj, pred, obj) rows.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    first_mention = _first_mention_fn(
-        spark, alias_dict, canonicalize.merge_map(alias_dict)
-    )
-
-    def update(key, pdfs, state: GroupState):
-        (conv_id,) = key
-        turns: list[tuple[int, int, str | None]] = []
-        for pdf in pdfs:
-            for _, row in pdf.sort_values(["turn_idx", "ts"]).iterrows():
-                turns.append(
-                    (int(row["turn_idx"]), row["ts"].value, first_mention(row["text"]))
-                )
-        turns.sort(key=lambda t: (t[0], t[1]))
-        prev = state.get if state.exists else None  # (turn_idx, ts_us, canonical|'')
-        out_subj, out_obj = [], []
-        last = (prev[0], prev[1], prev[2] or None) if prev else None
-        for turn_idx, ts_us, canonical in turns:
-            if last is not None and (turn_idx, ts_us) <= (last[0], last[1]):
-                # LATE-DATA POLICY (the watermark analog for this stateful
-                # op): a turn ordered at-or-before the committed state
-                # boundary arrives after its successor was already paired —
-                # emitting it now would fabricate a follows edge the batch
-                # semantics never produce. Drop it (documented; the batch
-                # backfill path recovers exact output on replay).
-                continue
-            if last is not None and canonical is not None and last[2] is not None:
-                out_subj.append(canonical)
-                out_obj.append(last[2])
-            last = (turn_idx, ts_us, canonical)
-        if last is not None:
-            state.update((last[0], last[1], last[2] or ""))
-        yield pd.DataFrame(
-            {
-                "conv_id": [conv_id] * len(out_subj),
-                "subj": out_subj,
-                "pred": [S.PRED_FOLLOWS] * len(out_subj),
-                "obj": out_obj,
-            }
-        )
-
-    stream = (
-        spark.readStream.schema(S.TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)  # one file per micro-batch: state must bridge them
-        .parquet(input_dir)
-    )
-    follows = (
-        stream.groupBy("conv_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="conv_id string, subj string, pred string, obj string",
-            stateStructType="last_turn_idx int, last_ts_us long, last_canonical string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    q = (
-        follows.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def stream_follows_exact(
     spark: SparkSession,
     input_dir: str,
@@ -201,12 +75,11 @@ def stream_follows_exact(
 ):
     """Cross-batch ``follows`` edges EXACT under arbitrary arrival order.
 
-    ``stream_follows_stateful`` carries only the last turn, so a turn that
-    arrives out of order (a real property of this corpus: the generator
-    shuffles rows across part files, testdata.py) is dropped by its
-    late-data policy and the pair set diverges from batch. This variant
-    makes the streamed result equal the batch ``kg.follows_triples`` set no
-    matter how conversations split across micro-batches:
+    A conversation can span micro-batches and its turns can arrive out of
+    order (a real property of this corpus: the generator shuffles rows
+    across part files, testdata.py). The streamed result still equals the
+    batch ``kg.follows_triples`` set no matter how conversations split
+    across micro-batches:
 
     - state buffers the conversation's full mention sequence
       ``(turn_idx, ts_us, canonical-or-'')`` — the same session-window-style
@@ -313,8 +186,7 @@ def stream_triples_exact(
 ):
     """Full triple stream whose drained result equals the batch
     ``kg.final_triples`` set even when conversations span micro-batches in
-    arbitrary row order — the exactness ``stream_triples`` only guarantees
-    for whole-conversation batches.
+    arbitrary row order.
 
     Two cooperating queries over the same file source (each with its own
     checkpoint under ``checkpoint_dir``):

@@ -302,7 +302,7 @@ def test_json_tree_golden(spark):
     doc = '{"a":{"b":[3,"x",true,null]},"c":"s","e":{},"f":[]}'
     rows = {
         (r.path, r.kind, r.value, r.n_children, r.depth, r.parent_path)
-        for r in json_ingest.json_tree(
+        for r in json_ingest.json_tree_arrow(
             spark.createDataFrame([(1, doc)], "ast_id long, ast string"),
             "ast_id",
             "ast",
@@ -321,12 +321,28 @@ def test_json_tree_golden(spark):
     assert len(rows) == 10
 
     # parent_id arithmetic: every non-root node's parent_id is an existing node_id
-    df = json_ingest.json_tree(
+    df = json_ingest.json_tree_arrow(
         spark.createDataFrame([(7, doc)], "ast_id long, ast string"), "ast_id", "ast"
     )
     ids = {r.node_id for r in df.collect()}
     parents = {r.parent_id for r in df.where(F.col("parent_id").isNotNull()).collect()}
     assert parents <= ids
+
+    # depth is unbounded: a 4-deep document walks to its leaf
+    deep = json_ingest.json_tree_arrow(
+        spark.createDataFrame(
+            [(1, '{"a": {"b": {"c": {"d": 1}}}}')], "ast_id long, ast string"
+        ),
+        "ast_id",
+        "ast",
+    )
+    assert {(r.path, r.kind, r.value, r.depth) for r in deep.collect()} == {
+        ("$", "object", None, 0),
+        ("$.a", "object", None, 1),
+        ("$.a.b", "object", None, 2),
+        ("$.a.b.c", "object", None, 3),
+        ("$.a.b.c.d", "number", "1", 4),
+    }
 
 
 def test_json_tree_matches_generator(spark):
@@ -337,7 +353,7 @@ def test_json_tree_matches_generator(spark):
 
     d = td.ensure_generated("sf0.001")
     aj = spark.read.parquet(f"{d}/ast_json.parquet").limit(50)
-    tree = json_ingest.json_tree(aj, "ast_id", "ast")
+    tree = json_ingest.json_tree_arrow(aj, "ast_id", "ast")
     n_clause_objs = (
         tree.where(F.col("path").rlike(r"^\$\.clauses\[\d+\]$")).count()
     )
@@ -347,26 +363,6 @@ def test_json_tree_matches_generator(spark):
         len(_json.loads(r.ast)["clauses"]) for r in aj.collect()
     )
     assert n_clause_objs == expected
-
-
-def test_json_tree_arrow_parity(spark):
-    """The single-pass Arrow walker and the declarative per-level walker
-    must produce identical trees (same rows, same ids)."""
-    from codepropertygraph_spark import testdata as td
-    from codepropertygraph_spark.sources import json_ingest
-
-    d = td.ensure_generated("sf0.001")
-    aj = spark.read.parquet(f"{d}/ast_json.parquet").limit(120)
-    cols = ["ast_id", "path", "parent_path", "depth", "kind", "value",
-            "n_children", "node_id", "parent_id"]
-    a = {tuple(r) for r in json_ingest.json_tree(aj, "ast_id", "ast").select(*cols).collect()}
-    b = {tuple(r) for r in json_ingest.json_tree_arrow(aj, "ast_id", "ast").select(*cols).collect()}
-    assert a == b
-    doc = '{"a":{"b":[3,"x",true,null]},"c":"s","e":{},"f":[]}'
-    df = spark.createDataFrame([(1, doc)], "ast_id long, ast string")
-    a2 = {tuple(r) for r in json_ingest.json_tree(df, "ast_id", "ast").select(*cols).collect()}
-    b2 = {tuple(r) for r in json_ingest.json_tree_arrow(df, "ast_id", "ast").select(*cols).collect()}
-    assert a2 == b2
 
 
 def test_resize_plan_golden(spark):
@@ -411,27 +407,6 @@ def test_near_dup_clusters(spark):
     }
     assert got[1] == got[2] == got[3] == 1  # exact + near dups cluster to min id
     assert got[4] == 4 and got[5] == 5  # singletons map to themselves
-
-
-def test_json_tree_rejects_overdeep_documents(spark):
-    """ADVICE regression: the declarative walker must refuse (not silently
-    truncate) documents deeper than max_depth."""
-    import pytest as _pytest
-
-    from codepropertygraph_spark.sources import json_ingest
-
-    df = spark.createDataFrame(
-        [(1, '{"a": {"b": {"c": {"d": 1}}}}')], "ast_id long, ast string"
-    )
-    with _pytest.raises(ValueError, match="max_depth"):
-        json_ingest.json_tree(df, "ast_id", "ast", max_depth=2).count()
-    # exactly-deep-enough passes and matches the arrow walker
-    deep = json_ingest.json_tree(df, "ast_id", "ast", max_depth=4)
-    arrow = json_ingest.json_tree_arrow(df, "ast_id", "ast")
-    cols = ["ast_id", "path", "parent_path", "depth", "kind", "value", "n_children"]
-    assert {tuple(r) for r in deep.select(*cols).collect()} == {
-        tuple(r) for r in arrow.select(*cols).collect()
-    }
 
 
 def test_ann_ivf_recall_floor(spark, emb):

@@ -674,3 +674,25 @@ def test_incremental_new_facts_matches_bruteforce(spark):
     # resume soundness: base facts ∪ new facts covers every distinct fact
     all_facts = {(s, p, o) for _, s, p, o in rows}
     assert base_facts | set(got) == all_facts
+
+
+def test_collect_all_reports_every_failure(spark):
+    """Concurrent branches: one failure is re-raised as itself, several are
+    raised together, none dropped."""
+    from codepropertygraph_spark.parallel import collect_all, eager_checkpoints
+
+    ok = spark.range(3)
+    boom_a = spark.range(1).select(F.raise_error(F.lit("boom_a")))
+    boom_b = spark.range(1).select(F.raise_error(F.lit("boom_b")))
+
+    assert [len(rows) for rows in collect_all(ok, ok)] == [3, 3]
+    with pytest.raises(Exception, match="boom_a") as one:
+        collect_all(ok, boom_a)
+    assert not isinstance(one.value, ExceptionGroup)
+    with pytest.raises(ExceptionGroup) as both:
+        collect_all(boom_a, ok, boom_b)
+    messages = [str(e) for e in both.value.exceptions]
+    assert len(messages) == 2
+    assert "boom_a" in messages[0] and "boom_b" in messages[1]
+    with pytest.raises(ExceptionGroup):
+        eager_checkpoints(boom_a, boom_b)

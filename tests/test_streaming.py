@@ -24,50 +24,33 @@ def test_stream_triples_matches_batch(spark, transcripts, alias_dict, tmp_path):
             if f.endswith(".parquet"):
                 shutil.copy(f"{base}/tmp{i}/{f}", f"{base}/in/file{i}.parquet")
 
-    ingest.stream_triples(spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    batch = {tuple(r) for r in kg.final_triples(transcripts, alias_dict).collect()}
-    # whole conversations per file + one micro-batch drain → exact equality
-    assert got == batch
+    def sink_rows() -> int:
+        return sum(
+            spark.read.parquet(f"{base}/out/{sub}").count()
+            for sub in ("clauses", "follows")
+        )
 
-    # exactly-once: rerun with the same checkpoint adds nothing
-    ingest.stream_triples(spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt")
-    got2 = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    assert got2 == got
-
-
-def test_stateful_follows_bridges_batches(spark, tmp_path):
-    """A conversation split across two arriving files: applyInPandasWithState
-    must emit the boundary follows pair the stateless path cannot see."""
-    from datetime import datetime
-
-    base = str(tmp_path)
-    rows1 = [("cS", 1, "user", "p1 mentions p2 x", None, datetime(2024, 1, 1, 0, 0, 0))]
-    rows2 = [("cS", 2, "assistant", "p2 mentions p1 y", None, datetime(2024, 1, 1, 0, 0, 10))]
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    ad = spark.createDataFrame(
-        [("p1", "person_one", "PERSON", 0.9), ("p2", "person_two", "PERSON", 0.9)],
-        "alias string, canonical_name string, entity_type string, prior double",
+    ingest.stream_triples_exact(
+        spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt"
     )
-    import os, shutil
+    got = {tuple(r) for r in ingest.read_triples_exact(spark, f"{base}/out").collect()}
+    batch = {tuple(r) for r in kg.final_triples(transcripts, alias_dict).collect()}
+    assert got == batch
+    n_rows = sink_rows()
 
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i, rows in enumerate([rows1, rows2]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(f"{base}/t{i}")
-        for f in os.listdir(f"{base}/t{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/t{i}/{f}", f"{base}/in/file{i}.parquet")
-
-    ingest.stream_follows_stateful(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    assert ("cS", "person_two", "follows", "person_one") in got
+    # exactly-once: rerun with the same checkpoint writes no row. Counted on
+    # the raw sink, since read_triples_exact dedups and would hide a replay.
+    ingest.stream_triples_exact(
+        spark, f"{base}/in", alias_dict, f"{base}/out", f"{base}/ckpt"
+    )
+    assert sink_rows() == n_rows
 
 
 def test_stateful_follows_applies_merge_map(spark, tmp_path):
-    """Regression: the stateful path must emit POST-merge canonicals. The
-    dictionary carries a mergeable twin pair (token-Jaccard 2/3 ≥ 0.5), so a
-    pre-merge dictionary lookup would emit 'person_4_4dup' where batch
-    (kg.follows_triples) emits 'person_4'."""
+    """Regression: the stateful follows path must emit POST-merge
+    canonicals. The dictionary carries a mergeable twin pair (token-Jaccard
+    2/3 ≥ 0.5), so a pre-merge dictionary lookup would emit
+    'person_4_4dup' where batch (kg.follows_triples) emits 'person_4'."""
     from datetime import datetime
 
     base = str(tmp_path)
@@ -83,17 +66,15 @@ def test_stateful_follows_applies_merge_map(spark, tmp_path):
         ],
         "alias string, canonical_name string, entity_type string, prior double",
     )
-    import os, shutil
+    _write_files(spark, base, [rows1, rows2], schema)
 
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i, rows in enumerate([rows1, rows2]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(f"{base}/t{i}")
-        for f in os.listdir(f"{base}/t{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/t{i}/{f}", f"{base}/in/file{i}.parquet")
-
-    ingest.stream_follows_stateful(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
+    ingest.stream_triples_exact(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
+    got = {
+        tuple(r)
+        for r in ingest.read_triples_exact(spark, f"{base}/out")
+        .where(F.col("pred") == "follows")
+        .collect()
+    }
     # both sides resolve to the merged representative person_4
     assert got == {("cM", "person_4", "follows", "person_4")}
 
@@ -254,39 +235,6 @@ def test_stream_hourly_counts_match_batch(spark, tmp_path):
         .collect()
     }
     assert got == batch
-
-
-def test_stateful_follows_drops_late_turns(spark, tmp_path):
-    """Late-data policy: a turn arriving AFTER a later turn was already
-    committed to state is dropped rather than fabricating a follows edge
-    (the watermark analog; batch replay recovers the exact output)."""
-    from datetime import datetime
-
-    base = str(tmp_path)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    # file0 carries turns 1 and 3; file1 carries the LATE turn 2
-    rows0 = [
-        ("cL", 1, "user", "p1 mentions p2 a", None, datetime(2024, 1, 1, 0, 0, 0)),
-        ("cL", 3, "user", "p2 mentions p1 b", None, datetime(2024, 1, 1, 0, 0, 20)),
-    ]
-    rows1 = [("cL", 2, "user", "p1 mentions p1 c", None, datetime(2024, 1, 1, 0, 0, 10))]
-    ad = spark.createDataFrame(
-        [("p1", "person_one", "PERSON", 0.9), ("p2", "person_two", "PERSON", 0.9)],
-        "alias string, canonical_name string, entity_type string, prior double",
-    )
-    import os, shutil
-
-    os.makedirs(f"{base}/in", exist_ok=True)
-    for i, rows in enumerate([rows0, rows1]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(f"{base}/t{i}")
-        for f in os.listdir(f"{base}/t{i}"):
-            if f.endswith(".parquet"):
-                shutil.copy(f"{base}/t{i}/{f}", f"{base}/in/file{i}.parquet")
-
-    ingest.stream_follows_stateful(spark, f"{base}/in", ad, f"{base}/out", f"{base}/ckpt")
-    got = {tuple(r) for r in spark.read.parquet(f"{base}/out").collect()}
-    # in-order pair (t3 follows t1) emitted; the late t2 produced nothing
-    assert got == {("cL", "person_two", "follows", "person_one")}
 
 
 def test_stream_dedup_keep_list_first_seen_wins(spark, tmp_path):

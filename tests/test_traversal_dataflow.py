@@ -1065,7 +1065,7 @@ def test_crossing_pairs_partial_pigeonhole_grid(spark):
                     out.add((s, dst))
         return out
 
-    got = {(r.src, r.dst) for r in dataflow._crossing_pairs(f, d, []).collect()}
+    got = {(r.src, r.dst) for r in dataflow._crossing_pairs(f, d).collect()}
     assert got == brute(frontier_rows, depart_rows)
     assert ("s6", "d6") in got  # the undecided cell, proven valid by the join
 
@@ -1076,7 +1076,7 @@ def test_crossing_pairs_partial_pigeonhole_grid(spark):
     d2 = spark.createDataFrame(
         depart_rows[:-1], "bridge string, dst2 string, n_d long, c_d1 string, c_d2 string"
     )
-    got2 = {(r.src, r.dst) for r in dataflow._crossing_pairs(f2, d2, []).collect()}
+    got2 = {(r.src, r.dst) for r in dataflow._crossing_pairs(f2, d2).collect()}
     assert got2 == {(s, dd) for s in core_s for dd in core_d}
 
     # sparse (cost_e small): one bridge, conv-pinned rows -> expansion path
@@ -1088,7 +1088,7 @@ def test_crossing_pairs_partial_pigeonhole_grid(spark):
         [("b0", "r", 1, "c1", None)],
         "bridge string, dst2 string, n_d long, c_d1 string, c_d2 string",
     )
-    got3 = {(r.src, r.dst) for r in dataflow._crossing_pairs(f3, d3, []).collect()}
+    got3 = {(r.src, r.dst) for r in dataflow._crossing_pairs(f3, d3).collect()}
     assert got3 == {("q", "r")}  # ("p","r") is conv-pinned invalid
 
 

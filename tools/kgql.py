@@ -63,7 +63,7 @@ def build_view_from_corpus(spark, sf_dir: str) -> GraphView:
     d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
     tr = spark.read.parquet(f"{d}/transcripts.parquet")
     ad = spark.read.parquet(f"{d}/alias_dict.parquet")
-    merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    merge = canonicalize.merge_map(ad)
     nodes = (
         G.conversation_nodes(tr)
         .unionByName(G.turn_nodes(tr))
