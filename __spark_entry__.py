@@ -377,12 +377,13 @@ def _q_kg_toolcalls(spark, sf_dir):
 def _q_kg_graph_nodes(spark, sf_dir):
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
     merge = canonicalize.merge_map(ad)
+    mentions, toolcalls = G.mention_nodes(tr, ad), G.toolcall_nodes(tr)
     nodes = (
         G.conversation_nodes(tr)
         .unionByName(G.turn_nodes(tr))
-        .unionByName(G.mention_nodes(tr, ad))
-        .unionByName(G.toolcall_nodes(tr))
-        .unionByName(G.entity_nodes(tr, ad, merge))
+        .unionByName(mentions)
+        .unionByName(toolcalls)
+        .unionByName(G.entity_nodes(mentions, toolcalls, ad, merge))
     )
     return nodes.groupBy("label").agg(F.count("*").alias("n")).orderBy("label")
 
@@ -394,9 +395,9 @@ def _q_kg_graph_edges(spark, sf_dir):
         G.ast_edges(tr, ad)
         .unionByName(G.next_edges(tr))
         .unionByName(G.contains_edges(tr, ad))
-        .unionByName(G.ref_edges(tr, ad, merge))
-        .unionByName(G.call_edges(tr, ad, merge))
-        .unionByName(G.rel_edges(tr, ad, merge))
+        .unionByName(G.ref_edges(G.mention_nodes(tr, ad), ad, merge))
+        .unionByName(G.call_edges(G.toolcall_nodes(tr), ad, merge))
+        .unionByName(G.rel_edges(kg.final_triples(tr, ad, merge=merge)))
     )
     return edges.groupBy("label").agg(F.count("*").alias("n")).orderBy("label")
 
@@ -1924,7 +1925,7 @@ def _q_kg_entities(spark, sf_dir):
     external flag (TypeNodePass + MethodStubCreator output projection)."""
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
     merge = canonicalize.merge_map(ad)
-    nodes = G.entity_nodes(tr, ad, merge)
+    nodes = G.entity_nodes(G.mention_nodes(tr, ad), G.toolcall_nodes(tr), ad, merge)
     return nodes.select(
         "full_name",
         F.element_at("props", "entity_type").alias("entity_type"),
@@ -2165,7 +2166,7 @@ def _q_kg_stub_removal(spark, sf_dir):
 
     tr, ad = _transcripts(spark, sf_dir), _alias_dict(spark, sf_dir)
     merge = canonicalize.merge_map(ad)
-    ents = G.entity_nodes(tr, ad, merge)
+    ents = G.entity_nodes(G.mention_nodes(tr, ad), G.toolcall_nodes(tr), ad, merge)
     real = ents.where(
         F.element_at("props", "is_external") != F.lit("true")
     ).select("id", "label", "full_name")

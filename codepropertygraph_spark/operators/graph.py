@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import schema as S
 from ..ids import hash_id_col, natural_key
-from . import extraction, kg, linking, ordering
+from . import extraction, linking, ordering
 
 
 def _node_frame(
@@ -151,28 +151,32 @@ def toolcall_nodes(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def entity_nodes(
-    transcripts: DataFrame, alias_dict: DataFrame, merge: DataFrame
-) -> DataFrame:
-    """Distinct post-merge canonical entities used anywhere (subjects,
-    objects, first mentions, AND the resolved targets of the ``tool``
-    column), plus dictionary type info; external stubs get is_external=true
-    (MethodStubCreator semantics).
+def _linked_names(df: DataFrame, alias_dict: DataFrame, merge: DataFrame) -> DataFrame:
+    """``df`` plus ``canonical``: its ``name`` column (a mention surface or a
+    tool) resolved through the scored dictionary, then the merge map."""
+    linked = linking.link_surfaces(df, alias_dict, "name", "canonical")
+    return linking.apply_merge(linked, merge, "canonical")
 
-    The tool-column union is load-bearing: ``call_edges`` links TOOLCALL →
+
+def entity_nodes(
+    mentions: DataFrame, toolcalls: DataFrame, alias_dict: DataFrame, merge: DataFrame
+) -> DataFrame:
+    """Distinct post-merge canonical entities used anywhere — the resolved
+    names of the MENTION nodes (subjects, objects, first mentions) AND of the
+    TOOLCALL nodes (the ``tool`` column) — plus dictionary type info;
+    external stubs get is_external=true (MethodStubCreator semantics).
+    ``mentions``/``toolcalls`` are MENTION/TOOLCALL node frames, committed or
+    fresh from :func:`mention_nodes`/:func:`toolcall_nodes`.
+
+    The tool union is load-bearing: ``call_edges`` links TOOLCALL →
     resolved(tool), so every canonical the tool column resolves to must have
     an ENTITY node even when the tool alias never appears as a text token —
     otherwise the committed graph carries dangling CALL edges that the
     validator flags and traversals silently drop."""
-    m = extraction.mention_surfaces(transcripts, alias_dict)
-    linked = linking.link_surfaces(m, alias_dict, "surface", "canonical")
-    linked = linking.apply_merge(linked, merge, "canonical")
-    tools = transcripts.where(F.col("tool").isNotNull()).select("tool")
-    tool_linked = linking.link_surfaces(tools, alias_dict, "tool", "canonical")
-    tool_linked = linking.apply_merge(tool_linked, merge, "canonical")
+    names = mentions.select("name").unionByName(toolcalls.select("name"))
     used = (
-        linked.select(F.col("canonical").alias("full_name"))
-        .unionByName(tool_linked.select(F.col("canonical").alias("full_name")))
+        _linked_names(names, alias_dict, merge)
+        .select(F.col("canonical").alias("full_name"))
         .distinct()
     )
     types = F.broadcast(
@@ -251,51 +255,32 @@ def contains_edges(transcripts: DataFrame, alias_dict: DataFrame) -> DataFrame:
     return c_turn.unionByName(c_mention).unionByName(c_tc)
 
 
-def ref_edges(
-    transcripts: DataFrame, alias_dict: DataFrame, merge: DataFrame
-) -> DataFrame:
-    """MENTION --REF--> ENTITY (Linker.linkToSingle semantics)."""
-    m = _ordered_mentions(transcripts, alias_dict)
-    linked = linking.link_surfaces(m, alias_dict, "surface", "canonical")
-    linked = linking.apply_merge(linked, merge, "canonical")
-    mention_key = natural_key(
-        S.MENTION, F.col("conv_id"), F.col("turn_order").cast("string"), F.col("pos").cast("string")
-    )
+def ref_edges(mentions: DataFrame, alias_dict: DataFrame, merge: DataFrame) -> DataFrame:
+    """MENTION --REF--> ENTITY (Linker.linkToSingle semantics) from MENTION
+    node rows."""
     return _edge_frame(
-        linked,
+        _linked_names(mentions, alias_dict, merge),
         S.REF,
-        hash_id_col(S.MENTION, mention_key),
+        F.col("id"),
         hash_id_col(S.ENTITY, natural_key(S.ENTITY, F.col("canonical"))),
     )
 
 
-def call_edges(
-    transcripts: DataFrame, alias_dict: DataFrame, merge: DataFrame
-) -> DataFrame:
-    """TOOLCALL --CALL--> ENTITY: the tool column resolved through the
-    dictionary (CallLinker static-dispatch analog)."""
-    t = ordering.ordered_turns(transcripts).where(F.col("tool").isNotNull())
-    linked = linking.link_surfaces(t, alias_dict, "tool", "canonical")
-    linked = linking.apply_merge(linked, merge, "canonical")
-    tc_key = natural_key(S.TOOLCALL, F.col("conv_id"), F.col("turn_order").cast("string"))
+def call_edges(toolcalls: DataFrame, alias_dict: DataFrame, merge: DataFrame) -> DataFrame:
+    """TOOLCALL --CALL--> ENTITY from TOOLCALL node rows: the tool name
+    resolved through the dictionary (CallLinker static-dispatch analog)."""
     return _edge_frame(
-        linked,
+        _linked_names(toolcalls, alias_dict, merge),
         S.CALL,
-        hash_id_col(S.TOOLCALL, tc_key),
+        F.col("id"),
         hash_id_col(S.ENTITY, natural_key(S.ENTITY, F.col("canonical"))),
     )
 
 
-def rel_edges(
-    transcripts: DataFrame, alias_dict: DataFrame, merge: DataFrame
-) -> DataFrame:
-    """ENTITY --REL--> ENTITY triple edges; props carry pred + conv_id
+def rel_edges(triples: DataFrame) -> DataFrame:
+    """ENTITY --REL--> ENTITY edges, one per distinct (conv_id, subj, pred,
+    obj) triple (:func:`kg.final_triples`); props carry pred + conv_id
     (REACHING_DEF VARIABLE-property pattern)."""
-    clauses = kg.clause_triples(transcripts, alias_dict, merge)
-    follows = kg.follows_triples(transcripts, alias_dict, merge)
-    triples = clauses.unionByName(follows).dropDuplicates(
-        ["conv_id", "subj", "pred", "obj"]
-    )
     return _edge_frame(
         triples,
         S.REL,

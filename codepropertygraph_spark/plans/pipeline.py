@@ -14,12 +14,24 @@ applied overlay or run with missing dependencies
 Spark translation (SURVEY.md §3.2): each pass is a DataFrame job whose
 outputs land in one **atomically committed overlay directory** —
 ``warehouse/overlays/NN_name/<table>/`` parquet plus a ``_COMMIT.json``
-marker written last (the commit point), carrying per-table row counters and
-wall time (the lineage/metrics contract of the north_rule). Reads union all
-committed overlays. Resume = rerun the driver: committed overlays are
-skipped; a half-written overlay has no marker and is overwritten
-idempotently. Rollback = drop overlay dirs from index k (the inverse-
-DiffGraph / snapshot-rollback analog, ``DiffGraph.scala:258-298``).
+marker written last (the commit point). The marker carries per-table row
+counters, per-file row counts and each table's Spark schema, all read from
+the footers the write just produced (:func:`footer_stats`: pyarrow on the
+driver, no Spark job), plus wall time and the number of Spark jobs the pass
+issued (its jobs run in the job group ``pass:<name>``). Reads union all
+committed overlays, each read with its recorded schema, so no
+schema-inference job runs.
+
+As in the reference, enhancement passes run over the graph earlier passes
+committed: ``link_files``, ``decorate`` and ``linking`` read the committed
+TURN/MENTION/TOOLCALL/CONVERSATION node rows instead of re-deriving them
+from the transcripts.
+
+Resume = rerun the driver: committed overlays are skipped once their
+marker's per-file counts match the footers on disk (a mismatch raises); a
+half-written overlay has no marker and is overwritten idempotently.
+Rollback = drop overlay dirs from index k (the inverse-DiffGraph /
+snapshot-rollback analog, ``DiffGraph.scala:258-298``).
 
 In production these directories are Iceberg snapshot commits (one snapshot
 per pass, snapshot summary = overlay name); the directory+marker protocol
@@ -32,13 +44,40 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass, field
+from contextlib import contextmanager
+from dataclasses import dataclass
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import schema as S
+
+# The footer key under which Spark stores the schema of each parquet file it
+# writes; it is the schema spark.read would infer from that file.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_stats(path: str) -> tuple[dict[str, int], dict | None]:
+    """``(rows per part file, Spark schema JSON)`` of the parquet table at
+    ``path``, read from the file footers with pyarrow on the driver — no
+    Spark job. Zero-row files (Spark writes one for an empty table, to carry
+    the schema) are left out of the counts. A missing directory has no
+    files and no schema."""
+    names = sorted(os.listdir(path)) if os.path.isdir(path) else []
+    rows: dict[str, int] = {}
+    schema = None
+    for f in names:
+        if not f.endswith(".parquet"):
+            continue
+        meta = pq.read_metadata(os.path.join(path, f))
+        if meta.num_rows:
+            rows[f] = meta.num_rows
+        if schema is None:
+            schema = json.loads(meta.metadata[SPARK_SCHEMA_KEY])
+    return rows, schema
 
 
 @dataclass
@@ -90,16 +129,22 @@ class Catalog:
         return os.path.join(self.overlays_dir, f"{index:02d}_{name}")
 
     def commit_overlay(
-        self, index: int, name: str, tables: dict[str, DataFrame]
+        self,
+        index: int,
+        name: str,
+        tables: dict[str, DataFrame],
+        jobs: Callable[[], int] | None = None,
     ) -> dict:
         """Write all tables, then the marker — the marker IS the commit.
-        Reruns of an uncommitted overlay overwrite leftovers idempotently."""
+        Reruns of an uncommitted overlay overwrite leftovers idempotently.
+        ``jobs``, when given, counts the Spark jobs issued for this overlay;
+        its count at commit time is recorded as ``jobs``."""
         d = self._overlay_dir(index, name)
         if os.path.isdir(d) and not os.path.exists(os.path.join(d, "_COMMIT.json")):
             shutil.rmtree(d)  # half-failed previous attempt
         t0 = time.time()
-        counters: dict[str, int] = {}
         partition_rows: dict[str, dict[str, int]] = {}
+        schemas: dict[str, dict] = {}
         for tname, df in tables.items():
             path = os.path.join(d, tname)
             if tname == "nodes":
@@ -111,36 +156,47 @@ class Catalog:
             elif tname == "edges":
                 df = df.sortWithinPartitions("label", "src", "dst")
             df.write.mode("overwrite").parquet(path)
-            written = self.spark.read.parquet(path)
-            # per-partition lineage (north_rule): row count per written file,
-            # so a resume/debug can pinpoint exactly which partition a
-            # discrepancy lives in without rescanning everything.
-            per_file = (
-                written.groupBy(F.input_file_name().alias("f"))
-                .count()
-                .collect()
-            )
-            partition_rows[tname] = {
-                os.path.basename(r["f"]): r["count"] for r in per_file
-            }
-            counters[tname] = sum(partition_rows[tname].values())
+            # per-partition lineage (north_rule) from the footers the write
+            # just produced, without a Spark job: the row count per written
+            # file, so a resume can pinpoint exactly which file disagrees
+            # with its marker, and the schema, so reads skip inference.
+            partition_rows[tname], schemas[tname] = footer_stats(path)
         record = {
             "overlay": name,
             "pass_index": index,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "wall_seconds": round(time.time() - t0, 3),
-            "counters": counters,
+            "counters": {t: sum(r.values()) for t, r in partition_rows.items()},
             "lineage": {
                 "tables": sorted(tables),
                 "warehouse": self.warehouse,
                 "partition_rows": partition_rows,
+                "schemas": schemas,
             },
         }
+        if jobs is not None:
+            record["jobs"] = jobs()
         tmp = os.path.join(d, "_COMMIT.json.tmp")
         with open(tmp, "w") as fh:
             json.dump(record, fh, indent=1)
         os.replace(tmp, os.path.join(d, "_COMMIT.json"))
         return record
+
+    def check_commit(self, record: dict) -> None:
+        """Reconcile a commit marker with the files on disk: every table's
+        per-file row counts, re-read from the parquet footers (no Spark
+        job), must equal the marker's ``partition_rows``. Raises
+        ``RuntimeError`` naming the overlay, table and file that differ."""
+        d = self._overlay_dir(record["pass_index"], record["overlay"])
+        for tname, want in record["lineage"]["partition_rows"].items():
+            got, _ = footer_stats(os.path.join(d, tname))
+            for f in sorted(want.keys() | got.keys()):
+                if want.get(f) != got.get(f):
+                    raise RuntimeError(
+                        f"overlay {record['overlay']}: table {tname} file {f} "
+                        f"has {got.get(f, 0)} rows on disk, its commit marker "
+                        f"records {want.get(f, 0)}"
+                    )
 
     def compact(self, dest_warehouse: str, files_per_table: int = 8) -> "Catalog":
         """TrimPass analog (A20, ``semanticcpg/.../trim/TrimPass``) as a
@@ -221,13 +277,19 @@ class Catalog:
     # -- table reads --------------------------------------------------------
 
     def read_table(self, table: str) -> DataFrame | None:
-        """Union of a table across all committed overlays."""
+        """Union of a table across all committed overlays, each read with the
+        schema its marker recorded, so no schema-inference job runs (a
+        marker without schemas falls back to inference)."""
         parts = []
         for c in self.committed_overlays():
             d = self._overlay_dir(c["pass_index"], c["overlay"])
             path = os.path.join(d, table)
             if os.path.isdir(path):
-                parts.append(self.spark.read.parquet(path))
+                schema = c["lineage"].get("schemas", {}).get(table)
+                reader = self.spark.read
+                if schema:
+                    reader = reader.schema(StructType.fromJson(schema))
+                parts.append(reader.parquet(path))
         if not parts:
             return None
         df = parts[0]
@@ -320,15 +382,21 @@ def _extraction_pass(ctx: PassContext) -> dict[str, DataFrame]:
     return {"nodes": nodes}
 
 
+def _committed_nodes(ctx: PassContext, *labels: str) -> DataFrame:
+    """The committed node rows carrying one of ``labels`` — what the
+    overlays applied so far hold, not a re-derivation from transcripts."""
+    nodes = ctx.catalog.read_table("nodes")
+    return nodes.where(F.col("label").isin(list(labels)))
+
+
 def _decorate_pass(ctx: PassContext) -> dict[str, DataFrame]:
     """MethodDecoratorPass analog (A8): 1:1 DERIVED node properties —
-    per-turn token and clause counts — committed as a ``node_props`` update
-    overlay that :meth:`Catalog.nodes` merges on read. The store stays
-    append-only (one immutable overlay per pass); updates are relational
-    rows, exactly the reference's SetNodeProperty diff entries."""
-    from ..operators import graph as G
-
-    turns = G.turn_nodes(ctx.transcripts)
+    per-turn token and clause counts of the committed TURN rows — committed
+    as a ``node_props`` update overlay that :meth:`Catalog.nodes` merges on
+    read. The store stays append-only (one immutable overlay per pass);
+    updates are relational rows, exactly the reference's SetNodeProperty
+    diff entries."""
+    turns = _committed_nodes(ctx, S.TURN)
     n_tokens = turns.select(
         "id",
         F.lit("n_tokens").alias("key"),
@@ -349,25 +417,17 @@ def _decorate_pass(ctx: PassContext) -> dict[str, DataFrame]:
 
 
 def _link_files_pass(ctx: PassContext) -> dict[str, DataFrame]:
-    """FileLinker analog (A11): SOURCE_FILE edges from every
-    within-conversation node (TURN/MENTION/TOOLCALL) to its CONVERSATION
-    node, creating stub file nodes for keys with no existing node (none in a
-    fresh build — the fallback matters for overlay/diff scenarios where the
-    file table is stale)."""
-    from ..operators import graph as G, linking
+    """FileLinker analog (A11): SOURCE_FILE edges from every committed
+    within-conversation node (TURN/MENTION/TOOLCALL) to its committed
+    CONVERSATION node, plus stub file nodes for keys with no existing node
+    (none in a fresh build, where ``nodes`` commits empty — the fallback
+    matters for overlay/diff scenarios where the file table is stale)."""
+    from ..operators import linking
 
-    files = G.conversation_nodes(ctx.transcripts)
-    srcs = (
-        G.turn_nodes(ctx.transcripts)
-        .unionByName(G.mention_nodes(ctx.transcripts, ctx.alias_dict))
-        .unionByName(G.toolcall_nodes(ctx.transcripts))
-        .select("id", "conv_id")
-    )
+    files = _committed_nodes(ctx, S.CONVERSATION)
+    srcs = _committed_nodes(ctx, S.TURN, S.MENTION, S.TOOLCALL).select("id", "conv_id")
     edges, created = linking.link_source_files(srcs, files)
-    out = {"edges": edges}
-    if not created.isEmpty():
-        out["nodes"] = created
-    return out
+    return {"edges": edges, "nodes": created}
 
 
 def _canonicalize_pass(ctx: PassContext) -> dict[str, DataFrame]:
@@ -379,31 +439,30 @@ def _canonicalize_pass(ctx: PassContext) -> dict[str, DataFrame]:
 
 
 def _linking_pass(ctx: PassContext) -> dict[str, DataFrame]:
-    """A6/A7/A10/A13 analog: entity nodes (incl. stubs), REF + CALL edges."""
+    """A6/A7/A10/A13 analog: entity nodes (incl. stubs), REF + CALL edges,
+    linked from the committed MENTION/TOOLCALL rows through the committed
+    merge map."""
     from ..operators import graph as G
 
     merge = ctx.catalog.read_table("merge_map")
-    nodes = G.entity_nodes(ctx.transcripts, ctx.alias_dict, merge)
-    edges = G.ref_edges(ctx.transcripts, ctx.alias_dict, merge).unionByName(
-        G.call_edges(ctx.transcripts, ctx.alias_dict, merge)
+    mentions = _committed_nodes(ctx, S.MENTION)
+    toolcalls = _committed_nodes(ctx, S.TOOLCALL)
+    nodes = G.entity_nodes(mentions, toolcalls, ctx.alias_dict, merge)
+    edges = G.ref_edges(mentions, ctx.alias_dict, merge).unionByName(
+        G.call_edges(toolcalls, ctx.alias_dict, merge)
     )
     return {"nodes": nodes, "edges": edges}
 
 
 def _rel_pass(ctx: PassContext) -> dict[str, DataFrame]:
-    """REL triple edges + the flat triples projection (the flagship)."""
+    """REL triple edges + the flat triples projection (the flagship). The
+    triples are computed once and persisted for both tables;
+    :func:`run_pipeline` unpersists them after the commit."""
     from ..operators import graph as G, kg
 
     merge = ctx.catalog.read_table("merge_map")
-    clauses = kg.clause_triples(ctx.transcripts, ctx.alias_dict, merge)
-    follows = kg.follows_triples(ctx.transcripts, ctx.alias_dict, merge)
-    triples = clauses.unionByName(follows).dropDuplicates(
-        ["conv_id", "subj", "pred", "obj"]
-    )
-    return {
-        "edges": G.rel_edges(ctx.transcripts, ctx.alias_dict, merge),
-        "triples": triples,
-    }
+    triples = kg.final_triples(ctx.transcripts, ctx.alias_dict, merge=merge).persist()
+    return {"edges": G.rel_edges(triples), "triples": triples}
 
 
 def _validate_pass(ctx: PassContext) -> dict[str, DataFrame]:
@@ -426,6 +485,32 @@ STANDARD_PASSES: tuple[Pass, ...] = (
 )
 
 
+@contextmanager
+def _job_group(spark: SparkSession, name: str):
+    """Run the block's Spark jobs in the job group ``pass:<name>``, then
+    restore the caller's group. Yields a function that counts the jobs the
+    block has issued so far."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"pass:{name}"
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(group))
+    sc.setJobGroup(group, f"pipeline pass {name}")
+
+    def jobs() -> int:
+        # the status tracker is fed by the listener bus; drain it first so
+        # that the last job started is counted
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(set(tracker.getJobIdsForGroup(group)) - before)
+
+    try:
+        yield jobs
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -433,20 +518,31 @@ def run_pipeline(
     warehouse: str,
     passes: tuple[Pass, ...] = STANDARD_PASSES,
 ) -> Catalog:
-    """Run the ordered pass list with skip-if-applied resume semantics."""
+    """Run the ordered pass list with skip-if-applied resume semantics. An
+    applied overlay is skipped after :meth:`Catalog.check_commit`; each
+    other pass runs and commits in its own job group (see
+    :func:`_job_group`), and its commit record counts the jobs."""
     cat = Catalog(spark, warehouse)
     ctx = PassContext(spark, cat, transcripts, alias_dict)
     for i, p in enumerate(passes):
-        applied = set(cat.overlay_names())
-        if p.name in applied:
+        committed = {c["overlay"]: c for c in cat.committed_overlays()}
+        if p.name in committed:
+            cat.check_commit(committed[p.name])
             continue  # LayerCreator: already applied
-        missing = [d for d in p.depends_on if d not in applied]
+        missing = [d for d in p.depends_on if d not in committed]
         if missing:
             raise RuntimeError(f"pass {p.name}: missing dependencies {missing}")
-        tables = p.run(ctx)
-        rec = cat.commit_overlay(i, p.name, tables)
+        with _job_group(spark, p.name) as jobs:
+            tables = p.run(ctx)
+            try:
+                rec = cat.commit_overlay(i, p.name, tables, jobs=jobs)
+            finally:
+                for df in tables.values():
+                    if df.is_cached:
+                        df.unpersist()
         print(
-            f"[pass {i} {p.name}] {rec['wall_seconds']}s counters={rec['counters']}"
+            f"[pass {i} {p.name}] {rec['wall_seconds']}s jobs={rec['jobs']} "
+            f"counters={rec['counters']}"
         )
     return cat
 

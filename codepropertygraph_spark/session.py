@@ -11,7 +11,10 @@ is chosen to also be the right default on a 1000-executor cluster reading
 - UTC session timezone (oracle comparisons against DuckDB, whose timestamps
   are UTC-naive),
 - shuffle partitions sized to cores locally; on a real cluster AQE coalesces
-  from a high initial number instead.
+  from a high initial number instead,
+- local cores and driver heap sized to the box the process runs on
+  (:func:`default_cores`, :func:`default_driver_memory`), overridable with
+  ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY``.
 """
 
 from __future__ import annotations
@@ -19,6 +22,31 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Local mode runs the executors inside the driver JVM, so the driver heap is
+# the whole engine's memory. The JVM's resident size runs past its heap
+# (metaspace, code cache, Netty and Arrow direct buffers), and the Python
+# workers of the Arrow/pandas UDFs and the page cache under the parquet
+# scans need physical memory of their own. 40 % of MemTotal leaves them the
+# rest; a heap above physical memory is never collected before the kernel's
+# OOM killer ends the JVM.
+DRIVER_MEMORY_FRACTION = 0.4
+
+
+def default_cores() -> int:
+    """The cores this process may run on (its affinity mask), which a
+    container can set below the host's core count."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``DRIVER_MEMORY_FRACTION`` of the box's ``MemTotal``, in MiB."""
+    with open(meminfo) as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                kib = int(line.split()[1])
+                return f"{int(kib * DRIVER_MEMORY_FRACTION) // 1024}m"
+    raise RuntimeError(f"no MemTotal line in {meminfo}")
 
 
 def get_spark(
@@ -28,9 +56,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    :func:`default_cores`); the driver heap to ``$SPARK_DRIVER_MEMORY`` (env,
+    default :func:`default_driver_memory`).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cores())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -65,10 +95,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode: the driver heap IS the executor heap — size it like an
-        # executor fleet (the sandbox has 128 GiB; cluster mode sets
-        # spark.executor.memory instead).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # local mode: the driver heap IS the executor heap (cluster mode
+        # sets spark.executor.memory instead).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

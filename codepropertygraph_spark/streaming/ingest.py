@@ -418,8 +418,13 @@ def stream_diff_zips(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        nodes = G.entity_nodes(batch_df, alias_dict, merge)
-        edges = G.rel_edges(batch_df, alias_dict, merge)
+        nodes = G.entity_nodes(
+            G.mention_nodes(batch_df, alias_dict),
+            G.toolcall_nodes(batch_df),
+            alias_dict,
+            merge,
+        )
+        edges = G.rel_edges(kg.final_triples(batch_df, alias_dict, merge=merge))
         proto_io.export_diff_zip(
             os.path.join(out_dir, f"{batch_id:05d}_overlay.zip"),
             n_shards=2,

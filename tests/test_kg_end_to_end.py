@@ -207,8 +207,10 @@ def test_incremental_batch_applies_as_diffgraph(spark, transcripts, alias_dict):
 
     def build(t):
         return (
-            G.entity_nodes(t, alias_dict, merge),
-            G.rel_edges(t, alias_dict, merge),
+            G.entity_nodes(
+                G.mention_nodes(t, alias_dict), G.toolcall_nodes(t), alias_dict, merge
+            ),
+            G.rel_edges(kg.final_triples(t, alias_dict, merge=merge)),
         )
 
     base_n, base_e = build(base_t)

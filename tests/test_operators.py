@@ -293,11 +293,13 @@ def test_entity_nodes_cover_tool_column(spark):
     )
     ad = _mini_alias(spark)
     merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
-    entity_ids = {r.id for r in G.entity_nodes(tr, ad, merge).collect()}
-    call_dsts = {r.dst for r in G.call_edges(tr, ad, merge).collect()}
+    mentions, toolcalls = G.mention_nodes(tr, ad), G.toolcall_nodes(tr)
+    entities = G.entity_nodes(mentions, toolcalls, ad, merge).collect()
+    entity_ids = {r.id for r in entities}
+    call_dsts = {r.dst for r in G.call_edges(toolcalls, ad, merge).collect()}
     assert call_dsts, "expected a CALL edge"
     assert call_dsts <= entity_ids, "CALL edge dst must exist as an ENTITY node"
-    names = {r.full_name for r in G.entity_nodes(tr, ad, merge).collect()}
+    names = {r.full_name for r in entities}
     assert "tool_hammer" in names  # resolved through the scored dictionary
 
 

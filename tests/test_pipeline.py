@@ -5,6 +5,9 @@ LayerCreator dependency checks / cpgvalidator tests.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import re
 import shutil
 
 import pytest
@@ -12,6 +15,10 @@ from pyspark.sql import functions as F
 
 from codepropertygraph_spark import schema as S
 from codepropertygraph_spark.plans import pipeline as P
+
+# Spark jobs of one cold STANDARD_PASSES build of the sf0.001 fixture, as
+# the commit records count them: 59 measured, plus a 10 % margin.
+FIXTURE_BUILD_JOB_BUDGET = 65
 
 
 @pytest.fixture(scope="module")
@@ -32,6 +39,145 @@ def test_counters_and_walltime_recorded(spark, warehouse):
         assert rec["counters"] and all(v >= 0 for v in rec["counters"].values())
         assert rec["wall_seconds"] >= 0
         assert rec["lineage"]["tables"]
+
+
+def test_fixture_build_within_job_budget(spark, warehouse):
+    """Every pass records the Spark jobs it issued, and one cold build of
+    the fixture stays within the job budget."""
+    recs = P.Catalog(spark, warehouse).committed_overlays()
+    jobs = {r["overlay"]: r["jobs"] for r in recs}
+    assert all(n >= 1 for n in jobs.values()), jobs  # every pass writes
+    assert sum(jobs.values()) <= FIXTURE_BUILD_JOB_BUDGET, jobs
+
+
+def test_commit_bookkeeping_runs_no_spark_job(spark, tmp_path):
+    """Row counts and schemas come from the parquet footers, and reads use
+    the recorded schema: a pass writing two job-free frames issues exactly
+    one Spark job per table write, reading it back issues none before an
+    action, and the caller's job group is restored afterwards."""
+    two = P.Pass("two", lambda ctx: {"a": spark.range(100), "b": spark.range(0)})
+    with P._job_group(spark, "caller"):
+        cat = P.run_pipeline(spark, None, None, str(tmp_path), passes=(two,))
+        assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") == "pass:caller"
+    (rec,) = cat.committed_overlays()
+    assert rec["jobs"] == 2
+    assert rec["counters"] == {"a": 100, "b": 0}
+    assert rec["lineage"]["partition_rows"]["b"] == {}  # zero-row file omitted
+    with P._job_group(spark, "probe") as jobs:
+        a, b = cat.read_table("a"), cat.read_table("b")
+        cat.check_commit(rec)
+        assert jobs() == 0
+    path = os.path.join(cat.overlays_dir, "00_two", "a")
+    assert a.schema == b.schema == spark.read.parquet(path).schema
+    assert a.count() == 100 and b.count() == 0
+
+
+def test_interrupted_commits_resume_to_the_same_graph(
+    spark, transcripts, alias_dict, warehouse, tmp_path, monkeypatch
+):
+    """Fault injection: a pass failing between two table writes, then one
+    failing after its last write but before its marker, each followed by a
+    rerun, end in the same overlays, counters and triples as an
+    uninterrupted build."""
+    wh = str(tmp_path / "wh_faults")
+    footer_stats = P.footer_stats
+
+    def fail_at(suffix):
+        def stats(path):
+            if path.endswith(suffix):
+                raise RuntimeError("injected fault")
+            return footer_stats(path)
+
+        return stats
+
+    # linking writes nodes, then edges
+    monkeypatch.setattr(P, "footer_stats", fail_at("_linking/nodes"))
+    with pytest.raises(RuntimeError, match="injected fault"):
+        P.run_pipeline(spark, transcripts, alias_dict, wh)
+    assert P.Catalog(spark, wh).overlay_names()[-1] == "canonicalize"
+    # rel_triples writes edges, then triples, then its marker
+    monkeypatch.setattr(P, "footer_stats", fail_at("_rel_triples/triples"))
+    with pytest.raises(RuntimeError, match="injected fault"):
+        P.run_pipeline(spark, transcripts, alias_dict, wh)
+    assert P.Catalog(spark, wh).overlay_names()[-1] == "linking"
+    assert os.listdir(os.path.join(wh, "overlays", "07_rel_triples", "triples"))
+    monkeypatch.undo()
+    got = P.run_pipeline(spark, transcripts, alias_dict, wh)
+    want = P.Catalog(spark, warehouse)
+    counters = lambda c: [(r["overlay"], r["counters"]) for r in c.committed_overlays()]
+    assert counters(got) == counters(want)
+    triples = lambda c: sorted(tuple(r) for r in c.read_table("triples").collect())
+    assert triples(got) == triples(want)
+
+
+def test_resume_detects_a_missing_part_file(
+    spark, transcripts, alias_dict, warehouse, tmp_path
+):
+    """A committed overlay whose part file has gone no longer matches its
+    marker: the next run raises, naming overlay, table and file."""
+    wh = str(tmp_path / "wh_missing")
+    shutil.copytree(warehouse, wh)
+    (rec,) = [
+        r for r in P.Catalog(spark, wh).committed_overlays() if r["overlay"] == "extraction"
+    ]
+    part = sorted(rec["lineage"]["partition_rows"]["nodes"])[0]
+    os.remove(os.path.join(wh, "overlays", "02_extraction", "nodes", part))
+    with pytest.raises(
+        RuntimeError, match=f"overlay extraction: table nodes file {re.escape(part)}"
+    ):
+        P.run_pipeline(spark, transcripts, alias_dict, wh)
+
+
+def _label_hashes(df) -> dict[str, tuple[int, str]]:
+    """label -> (rows, content hash); map columns hash as sorted entries."""
+    rows: dict[str, list[str]] = {}
+    for r in df.collect():
+        d = r.asDict()
+        d["props"] = sorted((d["props"] or {}).items())
+        rows.setdefault(d["label"], []).append(repr(sorted(d.items())))
+    return {
+        label: (len(v), hashlib.sha256("\n".join(sorted(v)).encode()).hexdigest())
+        for label, v in rows.items()
+    }
+
+
+def test_committed_graph_matches_transcript_builders(
+    spark, transcripts, alias_dict, warehouse
+):
+    """The passes read earlier overlays' committed rows; the oracles build
+    the same graph straight from the transcripts. Both must agree label by
+    label. Left out: the META_DATA node (no transcript builder) and
+    decorate's merged-on-read TURN props (test_decorate_pass_merge_on_read)."""
+    from codepropertygraph_spark.operators import canonicalize, kg, linking
+    from codepropertygraph_spark.operators import graph as G
+
+    tr, ad = transcripts, alias_dict
+    merge = canonicalize.merge_map(ad)
+    convs, turns = G.conversation_nodes(tr), G.turn_nodes(tr)
+    mentions, toolcalls = G.mention_nodes(tr, ad), G.toolcall_nodes(tr)
+    nodes = (
+        convs.unionByName(turns)
+        .unionByName(mentions)
+        .unionByName(toolcalls)
+        .unionByName(G.entity_nodes(mentions, toolcalls, ad, merge))
+    )
+    srcs = turns.unionByName(mentions).unionByName(toolcalls).select("id", "conv_id")
+    edges = (
+        G.ast_edges(tr, ad)
+        .unionByName(G.next_edges(tr))
+        .unionByName(G.contains_edges(tr, ad))
+        .unionByName(linking.link_source_files(srcs, convs)[0])
+        .unionByName(G.ref_edges(mentions, ad, merge))
+        .unionByName(G.call_edges(toolcalls, ad, merge))
+        .unionByName(G.rel_edges(kg.final_triples(tr, ad, merge=merge)))
+    )
+    cat = P.Catalog(spark, warehouse)
+    decorated = F.map_filter("props", lambda k, _: ~k.isin("n_tokens", "n_preds"))
+    committed = cat.nodes().where(F.col("label") != S.META_DATA).withColumn(
+        "props", decorated
+    )
+    assert _label_hashes(committed) == _label_hashes(nodes)
+    assert _label_hashes(cat.edges()) == _label_hashes(edges)
 
 
 def test_resume_skips_applied(spark, transcripts, alias_dict, warehouse):

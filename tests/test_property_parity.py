@@ -158,20 +158,21 @@ def test_graph_validates_clean_on_arbitrary_input(spark_global, rows):
         "alias string, canonical_name string, entity_type string, prior double",
     )
     merge = canonicalize.merge_map(ad).localCheckpoint(eager=True)
+    mentions, toolcalls = G.mention_nodes(tr, ad), G.toolcall_nodes(tr)
     nodes = (
         G.conversation_nodes(tr)
         .unionByName(G.turn_nodes(tr))
-        .unionByName(G.mention_nodes(tr, ad))
-        .unionByName(G.toolcall_nodes(tr))
-        .unionByName(G.entity_nodes(tr, ad, merge))
+        .unionByName(mentions)
+        .unionByName(toolcalls)
+        .unionByName(G.entity_nodes(mentions, toolcalls, ad, merge))
     )
     edges = (
         G.ast_edges(tr, ad)
         .unionByName(G.next_edges(tr))
         .unionByName(G.contains_edges(tr, ad))
-        .unionByName(G.ref_edges(tr, ad, merge))
-        .unionByName(G.call_edges(tr, ad, merge))
-        .unionByName(G.rel_edges(tr, ad, merge))
+        .unionByName(G.ref_edges(mentions, ad, merge))
+        .unionByName(G.call_edges(toolcalls, ad, merge))
+        .unionByName(G.rel_edges(kg.final_triples(tr, ad, merge=merge)))
     )
     violations = P.validate_frames(spark, nodes, edges).collect()
     assert violations == [], violations

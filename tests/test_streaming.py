@@ -310,15 +310,19 @@ def test_stream_diff_zips_rebuild_graph(spark, transcripts, alias_dict, tmp_path
     assert zips, "no overlay zips written"
 
     empty_n = spark.createDataFrame([], G.conversation_nodes(transcripts).schema)
-    empty_e = spark.createDataFrame([], G.rel_edges(transcripts, alias_dict,
-        C.merge_map(alias_dict)).schema)
+    merge = C.merge_map(alias_dict)
+    want_e = G.rel_edges(kg.final_triples(transcripts, alias_dict, merge=merge))
+    empty_e = spark.createDataFrame([], want_e.schema)
     nodes, edges = ingest.apply_diff_zip_sequence(
         spark, empty_n, empty_e, f"{base}/zips"
     )
 
-    merge = C.merge_map(alias_dict)
-    want_n = G.entity_nodes(transcripts, alias_dict, merge)
-    want_e = G.rel_edges(transcripts, alias_dict, merge)
+    want_n = G.entity_nodes(
+        G.mention_nodes(transcripts, alias_dict),
+        G.toolcall_nodes(transcripts),
+        alias_dict,
+        merge,
+    )
     canon = lambda df: {
         tuple(r)
         for r in df.select(

@@ -42,7 +42,7 @@ def main():
     import __spark_entry__ as E
     from codepropertygraph_spark.session import get_spark
 
-    spark = get_spark(master="local[16]")
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -57,27 +57,28 @@ def build_view_from_corpus(spark, sf_dir: str) -> GraphView:
     """GraphView straight from transcripts + alias dict (no warehouse):
     the same node/edge builders the pipeline passes commit."""
     from codepropertygraph_spark import testdata as td
-    from codepropertygraph_spark.operators import canonicalize
+    from codepropertygraph_spark.operators import canonicalize, kg
     from codepropertygraph_spark.operators import graph as G
 
     d = td.ensure_generated(td.tier_of_sf_dir(sf_dir))
     tr = spark.read.parquet(f"{d}/transcripts.parquet")
     ad = spark.read.parquet(f"{d}/alias_dict.parquet")
     merge = canonicalize.merge_map(ad)
+    mentions, toolcalls = G.mention_nodes(tr, ad), G.toolcall_nodes(tr)
     nodes = (
         G.conversation_nodes(tr)
         .unionByName(G.turn_nodes(tr))
-        .unionByName(G.mention_nodes(tr, ad))
-        .unionByName(G.toolcall_nodes(tr))
-        .unionByName(G.entity_nodes(tr, ad, merge))
+        .unionByName(mentions)
+        .unionByName(toolcalls)
+        .unionByName(G.entity_nodes(mentions, toolcalls, ad, merge))
     )
     edges = (
         G.ast_edges(tr, ad)
         .unionByName(G.next_edges(tr))
         .unionByName(G.contains_edges(tr, ad))
-        .unionByName(G.ref_edges(tr, ad, merge))
-        .unionByName(G.call_edges(tr, ad, merge))
-        .unionByName(G.rel_edges(tr, ad, merge))
+        .unionByName(G.ref_edges(mentions, ad, merge))
+        .unionByName(G.call_edges(toolcalls, ad, merge))
+        .unionByName(G.rel_edges(kg.final_triples(tr, ad, merge=merge)))
     )
     return GraphView(nodes, edges)
 
