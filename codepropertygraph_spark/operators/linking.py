@@ -189,17 +189,16 @@ def link_source_files(
         .select(key.alias("__key"))
         .dropDuplicates()
     )
-    base_order = files.agg(
-        F.coalesce(F.max("order"), F.lit(-1)).alias("m")
-    ).collect()[0].m
+    # one-row aggregate, joined lazily: no driver round trip of its own
+    base_order = files.agg(F.coalesce(F.max("order"), F.lit(-1)).alias("__base"))
     w = Window.orderBy("__key")  # missing-key set only; deterministic order
-    created = missing.select(
+    created = missing.crossJoin(base_order).select(
         hash_id_col(S.CONVERSATION, natural_key(S.CONVERSATION, F.col("__key"))).alias("id"),
         F.lit(S.CONVERSATION).alias("label"),
         F.col("__key").cast("string").alias("name"),
         F.lit(None).cast("string").alias("full_name"),
         F.lit(None).cast("string").alias("code"),
-        (F.lit(base_order) + F.row_number().over(w)).cast("int").alias("order"),
+        (F.col("__base") + F.row_number().over(w)).cast("int").alias("order"),
         F.col("__key").cast("string").alias("conv_id"),
         F.lit(None).cast("int").alias("turn_idx"),
         F.create_map().cast("map<string,string>").alias("props"),

@@ -14,7 +14,16 @@ is chosen to also be the right default on a 1000-executor cluster reading
   from a high initial number instead,
 - local cores and driver heap sized to the box the process runs on
   (:func:`default_cores`, :func:`default_driver_memory`), overridable with
-  ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY``.
+  ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY``,
+- a JIT tiering policy for the driver JVM (:data:`JIT_JAVA_OPTIONS`): every
+  build, drain or test run starts a fresh JVM that runs most of Spark's own
+  code only a few thousand times, so the C2 (tier-4) compiles HotSpot's
+  default thresholds trigger cost more CPU than they save before the JVM
+  exits. The flags go in ``spark.driver.defaultJavaOptions``; Spark appends
+  ``spark.driver.extraJavaOptions`` (``SPARK_GRAFT_JAVA_OPTS``) after them,
+  and the JVM takes the last value of a repeated ``-XX:`` flag, so e.g.
+  ``SPARK_GRAFT_JAVA_OPTS=-XX:Tier4InvocationThreshold=5000`` restores that
+  default.
 """
 
 from __future__ import annotations
@@ -31,6 +40,24 @@ from pyspark.sql import SparkSession
 # rest; a heap above physical memory is never collected before the kernel's
 # OOM killer ends the JVM.
 DRIVER_MEMORY_FRACTION = 0.4
+
+# HotSpot's tier-4 (C2) thresholds, 10x their defaults; tiers 1-3 (C1) are
+# untouched. A cold kgbench `build` (4-core box) starts a fresh JVM whose
+# compilers report 85 s of compile time (CompilationMXBean), 37-44 CPU-s of
+# it on the C2 threads, mostly for Janino, java.*, Catalyst, Scala collection
+# and serialization code that runs a few thousand times per build and never
+# repays a C2 compile. Build CPU (cpu_ref, s) by multiplier, seeds 900-901
+# (x10 and x20 also 902-903): x1 107-108, x5 88-106, x10 79-90, x20 75-87,
+# x40 86-87. x20 reads ~4 % below x10, about one run-to-run spread, and x40
+# rises again, as more time runs in profiled C1 code; x10 is the smallest
+# value within that spread of the minimum.
+# Stopping at C1 (-XX:TieredStopAtLevel=1) builds in 60 CPU-s but doubles
+# the per-row path (bench.py kg_pipeline at sf0.1: 14.5 s and 51 CPU-s at
+# x1, 28.6 s and 100 CPU-s at C1 only).
+JIT_JAVA_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def default_cores() -> int:
@@ -104,6 +131,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.driver.defaultJavaOptions", JIT_JAVA_OPTIONS)
     )
     java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
     if java_opts:

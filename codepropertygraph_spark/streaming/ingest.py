@@ -93,9 +93,15 @@ def stream_follows_exact(
       ``read_triples_exact`` selects each conversation's latest — the
       streaming analog of update-mode output over a file sink.
 
-    Scale shape: state is O(turns-per-conversation) — identical to what any
-    per-conversation window already shuffles — and emission is
+    Scale shape: each conversation's state is O(its turns) — identical to
+    what any per-conversation window already shuffles — and emission is
     O(pairs-per-touched-conversation) per batch, not O(corpus).
+
+    State bound: the state has ``GroupStateTimeout.NoTimeout``, so it keeps
+    every turn of every conversation ever seen and is never dropped; the
+    state store grows with the whole stream, O(total turns), not with the
+    conversations still open. A late turn can arrive for any conversation,
+    so no state is safe to drop without a lateness bound.
 
     ``merge`` is ``canonicalize.merge_map(alias_dict)`` when the caller has
     it already; otherwise it is computed here. The state's ``ts_us`` field

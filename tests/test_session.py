@@ -1,5 +1,5 @@
-"""The session factory's box-derived defaults, checked without starting a
-JVM."""
+"""The session factory's defaults: the box-derived ones checked without
+starting a JVM, the JIT policy read back from the running one."""
 
 from __future__ import annotations
 
@@ -23,3 +23,18 @@ def test_default_driver_memory_is_a_fraction_of_memtotal(tmp_path):
     meminfo.write_text("MemFree:  1000 kB\n")
     with pytest.raises(RuntimeError, match="MemTotal"):
         session.default_driver_memory(str(meminfo))
+
+
+def test_jit_tiering_policy_is_in_force(spark):
+    # Spark's launcher passes -XX:+IgnoreUnrecognizedVMOptions, so a
+    # misspelled flag would be dropped without an error; read each one back.
+    jvm = spark.sparkContext._jvm
+    diagnostics = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    flags = dict(
+        opt.removeprefix("-XX:").split("=") for opt in session.JIT_JAVA_OPTIONS.split()
+    )
+    assert len(flags) == 4
+    for name, value in flags.items():
+        assert diagnostics.getVMOption(name).getValue() == value, name
